@@ -17,16 +17,20 @@ the small ones.
 
 from __future__ import annotations
 
+import glob
+import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dumpty_spark.plans.planner import (
+    PartitionPlan,
     exact_julienne_boundaries,
     introspect_stats,
+    introspect_stats_fast,
     plan_partitions,
 )
 from dumpty_spark.plans.state import StateStore, TableState
@@ -73,10 +77,6 @@ def _process_table(
     if not state.introspection_fresh(cfg.introspection_ttl_s):
         stats = None
         if cfg.fastcount and cfg.source_dir:
-            import os
-
-            from dumpty_spark.plans.planner import introspect_stats_fast
-
             src_path = os.path.join(cfg.source_dir, f"{name}.parquet")
             if os.path.exists(src_path):
                 stats = introspect_stats_fast(src_path, pk)
@@ -103,8 +103,6 @@ def _process_table(
                     boundaries=boundaries,
                 )
         if plan is None:
-            from dumpty_spark.plans.planner import PartitionPlan
-
             plan = PartitionPlan(strategy="single")
         state.strategy = plan.strategy
         state.partition_column = plan.column
@@ -113,8 +111,6 @@ def _process_table(
 
     # extract (the fixture source is already a DataFrame; a JDBC source
     # would run sources.jdbc.scan with the same plan)
-    from pyspark.sql import Observation
-
     out = normalize_df(df) if cfg.normalize_schema else df
     # X7 counter rides the write job itself (Observation): zero extra
     # jobs, the Spark analog of the reference's load-job-reported
@@ -134,15 +130,16 @@ def _process_table(
     state.warnings = with_retries(lambda: list(write_schema_sidecar(out, path)))
 
     # validate (X7) — json trusts the observed write-job count (a re-read
-    # would gunzip every byte again); parquet re-counts the sink, which
-    # is footer metadata only, the strictly stronger at-rest check
+    # would gunzip every byte again); parquet counts the rows at rest
+    # from the footers of the files just written, on the driver with no
+    # Spark job: the strictly stronger check, since a part file lost
+    # after the write shows up as missing rows
     if cfg.sink_format == "json":
         state.rows_loaded = int(obs.get["rows_written"])
         produced_default = None
     else:
-        loaded = spark.read.schema(out.schema).parquet(path)
-        state.rows_loaded = loaded.count()
-        produced_default = loaded.rdd.getNumPartitions()
+        state.rows_loaded = introspect_stats_fast(path).rows
+        produced_default = len(glob.glob(glob_uri))
 
     # size feedback (X6)
     state.sink_bytes = with_retries(sink_size_bytes, glob_uri)

@@ -238,7 +238,6 @@ def q_format_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             [(lambda f=f: leg(f)) for f in _FORMATS]
             + [lambda: fp_agg(docs)],
-            max_workers=4,
         )
         truth = results[-1]
         for fmt, got in zip(_FORMATS, results):

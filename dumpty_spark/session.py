@@ -122,6 +122,43 @@ def scratch_cleanup(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
+def last_job_id(spark: SparkSession) -> int:
+    """The newest Spark job id in the status store (-1 before any job).
+    Ids are sequential, so the difference of two reads is the number of
+    jobs started in between, from every thread, job group or not, and
+    with the UI off."""
+    jobs = _status_store(spark).jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def jobs_after(spark: SparkSession, job_id: int) -> list[dict]:
+    """Jobs with an id above ``job_id``, newest first: description and
+    shuffle-write bytes."""
+    store = _status_store(spark)
+    jobs = store.jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= job_id:
+            break
+        sids = j.stageIds()
+        desc = j.description()
+        out.append({
+            "description": desc.get() if desc.isDefined() else None,
+            "shuffle_bytes": sum(
+                store.lastStageAttempt(sids.apply(k)).shuffleWriteBytes()
+                for k in range(sids.size())
+            ),
+        })
+    return out
+
+
+def _status_store(spark: SparkSession):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
+
+
 def get_session(
     app_name: str = "dumpty_spark",
     master: str | None = None,

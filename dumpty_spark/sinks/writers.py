@@ -31,6 +31,29 @@ TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss"  # reference config.py:20
 TARGET_PARTITION_BYTES = 50 * 1024 * 1024  # reference config.py:53
 
 
+def _sized(df: DataFrame, partitions: int | None) -> DataFrame:
+    """Shape ``df`` into ``partitions`` output files (None: as it comes).
+    One file from an input that already reads as one partition is a
+    ``coalesce(1)``: every row already ends in one writer task, so a
+    round-robin exchange — a shuffle-map job, plus the local sort Spark
+    runs before it — buys nothing. Any other input keeps the exchange:
+    ``coalesce(1)`` would pull its scan and encode into that one task,
+    where ``repartition`` runs them in parallel."""
+    if partitions == 1 and _reads_as_one_partition(df):
+        return df.coalesce(1)
+    return df.repartition(partitions) if partitions else df
+
+
+def _reads_as_one_partition(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan yields one partition, answered by
+    planning alone. A plan AQE wraps holds an exchange or a subquery, and
+    asking its partition count would run them, so it counts as many."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or not plan.subqueriesAll().isEmpty():
+        return False
+    return plan.execute().getNumPartitions() == 1
+
+
 def write_ndjson(
     df: DataFrame,
     path: str,
@@ -39,7 +62,7 @@ def write_ndjson(
 ) -> str:
     """K1: newline-delimited JSON, gzip, overwrite — the reference's sink
     signature (pipeline.py:466-467). Returns a part-file glob."""
-    out = df.repartition(partitions) if partitions else df
+    out = _sized(df, partitions)
     (
         out.write.mode("overwrite")
         .option("timestampFormat", TIMESTAMP_FORMAT)
@@ -63,7 +86,7 @@ def write_format(
     round-trips column names."""
     if fmt not in {"json", "csv", "parquet", "orc"}:
         raise ValueError(f"unsupported sink format: {fmt}")
-    out = df.repartition(partitions) if partitions else df
+    out = _sized(df, partitions)
     w = (
         out.write.mode("overwrite")
         .option("timestampFormat", TIMESTAMP_FORMAT)
@@ -76,7 +99,7 @@ def write_format(
 
 
 def write_parquet(df: DataFrame, path: str, partitions: int | None = None) -> str:
-    out = df.repartition(partitions) if partitions else df
+    out = _sized(df, partitions)
     out.write.mode("overwrite").parquet(path)
     return f"{path}/part-*"
 

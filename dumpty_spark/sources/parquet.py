@@ -15,8 +15,11 @@ dumpty_spark.plans earns its keep).
 from __future__ import annotations
 
 import os
+import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 TABLES = (
     "region",
@@ -37,8 +40,10 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # (applicationId, sf_dir, table) -> analyzed DataFrame. Plan/metadata
-# memo only (file listing + schema resolution); see load_table.
+# memo only (file listing + schema resolution); see load_table. Driver
+# threads share it, so every lookup, eviction and insert holds the lock.
 _RELATION_CACHE: dict[tuple, DataFrame] = {}
+_RELATION_LOCK = threading.Lock()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,26 +75,108 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # naive reading — silently skewing all event-time queries.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _RELATION_CACHE.get(key)
+    with _RELATION_LOCK:
+        cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         df = _normalize_events_ts(df)
     # Memoize the ANALYZED RELATION, not results: re-resolving the same
-    # fixture table costs a directory listing + a parquet footer read
-    # per call (~0.15-0.3s driver-side), and the suite resolves the ten
-    # fixture tables hundreds of times. A production deployment pays
-    # this once by registering the table in a catalog; the memo is the
-    # same thing per (session, sf_dir). Every action on the returned
-    # frame still scans the parquet files — nothing about query
-    # execution or results is cached. Keyed on applicationId so a new
-    # SparkSession never sees another session's resolved plans; stale
-    # sessions' entries are dropped eagerly.
-    for k in [k for k in _RELATION_CACHE if k[0] != key[0]]:
-        del _RELATION_CACHE[k]
-    _RELATION_CACHE[key] = df
-    return df
+    # fixture table costs a directory listing, a driver-side footer read
+    # and an analysis per call, and the suite resolves the ten fixture
+    # tables hundreds of times. A production deployment pays this once
+    # by registering the table in a catalog; the memo is the same thing
+    # per (session, sf_dir). Every action on the returned frame still
+    # scans the parquet files — nothing about query execution or results
+    # is cached. Keyed on applicationId so a new SparkSession never sees
+    # another session's resolved plans; stale sessions' entries are
+    # dropped eagerly. Two threads may both build a cold table; the first
+    # insert wins and both return it.
+    with _RELATION_LOCK:
+        for k in [k for k in _RELATION_CACHE if k[0] != key[0]]:
+            del _RELATION_CACHE[k]
+        return _RELATION_CACHE.setdefault(key, df)
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read on the
+    driver from one footer instead of by a Spark job.
+
+    Without ``mergeSchema`` Spark's inference reads a single footer too —
+    the first data file in path order — but in a one-task Spark job,
+    whose fixed cost is most of what resolving a small table costs.
+    This reads the same file with Spark's own converter, built from the
+    session confs as they are now (so after ``load_table``'s ``events``
+    pins), and returns the schema nullable, as the relation carries it.
+
+    Returns None, and the caller lets Spark infer, whenever the answer
+    could differ from Spark's: a non-local path, a summary file
+    (``_metadata``/``_common_metadata``, which Spark reads first), a
+    partitioned layout, schema merging, or a footer that does not read.
+    """
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    jss = spark._jsparkSession
+    sql_conf = jss.sessionState().conf()
+    if sql_conf.isParquetSchemaMergingEnabled():
+        return None
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    conv_cls = pq.ParquetToSparkSchemaConverter
+    try:
+        jpath = jvm.org.apache.hadoop.fs.Path(first)
+        hconf = jss.sessionState().newHadoopConf()
+        meta = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, hconf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        # the arguments ParquetFileFormat.mergeSchemasInParallel passes:
+        # session confs, and the constructor defaults for case
+        # sensitivity, field ids and variant annotations
+        converter = conv_cls(
+            sql_conf.isParquetBinaryAsString(),
+            sql_conf.isParquetINT96AsTimestamp(),
+            getattr(conv_cls, "$lessinit$greater$default$3")(),
+            sql_conf.parquetInferTimestampNTZEnabled(),
+            sql_conf.legacyParquetNanosAsLong(),
+            getattr(conv_cls, "$lessinit$greater$default$6")(),
+            getattr(conv_cls, "$lessinit$greater$default$7")(),
+            sql_conf.parquetReaderRespectUnknownTypeAnnotation(),
+        )
+        jschema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(jpath, meta), converter
+        )
+        return _parse_datatype_json_string(jschema.asNullable().json())
+    except Py4JError:
+        return None
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file Spark's schema inference reads for a local, unpartitioned
+    parquet path (itself, or the first data file by name), or None when
+    inference would read something else. Mirrors Spark's listing filter:
+    names starting with ``_`` or ``.`` and in-flight ``._COPYING_`` files
+    are not data."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    names = []
+    for entry in os.scandir(path):
+        n = entry.name
+        if n.startswith(("_metadata", "_common_metadata")):
+            return None
+        if (n.startswith("_") and "=" not in n) or n.startswith(".") or n.endswith("._COPYING_"):
+            continue
+        if not entry.is_file():
+            return None
+        names.append(n)
+    return os.path.join(path, min(names)) if names else None
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

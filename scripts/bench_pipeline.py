@@ -6,7 +6,9 @@ run_pipeline at $SPARK_GRAFT_SF_DIR (default sf0.1).
 Prints ONE JSON line {"metric": "pipeline_rows_per_sec", ...} and
 writes PIPELINE_BENCH.json next to the repo's other committed
 summaries. The reference publishes no throughput numbers (BASELINE.md),
-so this records our own floor per round.
+so this records our own floor per round. ``jobs_per_table`` is the
+number of Spark jobs the run started per table, read from Spark's status
+store: the per-table fixed cost that dominates a fleet of small tables.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ def main() -> int:
 
     from dumpty_spark.pipeline import PipelineConfig, run_pipeline
     from dumpty_spark.plans.state import StateStore
-    from dumpty_spark.session import get_session
+    from dumpty_spark.session import get_session, last_job_id
     from dumpty_spark.sources import load_table
 
     spark = get_session("dumpty-spark-pipeline-bench")
@@ -46,10 +48,12 @@ def main() -> int:
             fastcount=True,
             source_dir=sf_dir,
         )
+        mark = last_job_id(spark)
         t0 = time.perf_counter()
         with StateStore(os.path.join(tmp, "state")) as store:
             summary = run_pipeline(spark, dfs, cfg, store)
         elapsed = time.perf_counter() - t0
+        jobs = last_job_id(spark) - mark
 
     rows = summary["total_rows"]
     out = {
@@ -59,6 +63,7 @@ def main() -> int:
         "rows": rows,
         "wall_sec": round(elapsed, 2),
         "n_tables": len(tables),
+        "jobs_per_table": round(jobs / len(tables), 2),
         "sink_format": "ndjson-gzip",
         "all_consistent": summary.get("all_consistent"),
         "sf_dir": sf_dir,

@@ -51,6 +51,59 @@ def test_pipeline_ttl_reuse_and_feedback(spark, sf_smoke, tmp_path):
     assert s2["all_consistent"]
 
 
+def test_pipeline_fastcount_one_job_per_parquet_table(spark, sf_smoke, tmp_path):
+    """With fastcount, a cold parquet table costs one Spark job, its write:
+    introspection, the one-file sizing and the reconcile are answered on
+    the driver."""
+    from dumpty_spark.session import jobs_after, last_job_id
+
+    names = ("region", "nation", "supplier", "customer", "orders")
+    tables = {n: load_table(spark, sf_smoke, n) for n in names}
+    cfg = PipelineConfig(
+        sink_dir=str(tmp_path / "out"),
+        workers=4,
+        pk_by_table={"customer": "c_custkey", "orders": "o_orderkey"},
+        fastcount=True,
+        source_dir=sf_smoke,
+    )
+    mark = last_job_id(spark)
+    with StateStore(str(tmp_path / "state")) as store:
+        summary = run_pipeline(spark, tables, cfg, store)
+    jobs = jobs_after(spark, mark)
+    assert summary["n_errors"] == 0, summary["errors"]
+    assert summary["all_consistent"]
+    assert sorted(j["description"] for j in jobs) == sorted(f"extract:{n}" for n in names)
+
+
+def test_parquet_sink_missing_part_file_is_inconsistent(spark, sf_smoke, tmp_path, monkeypatch):
+    """The reconcile counts rows at rest: a part file lost after the write
+    makes the table inconsistent."""
+    import glob
+    import os
+
+    from dumpty_spark import pipeline
+
+    real = pipeline.write_parquet
+
+    def lossy(df, path, partitions=None):
+        uri = real(df, path, partitions)
+        os.remove(sorted(glob.glob(uri))[0])
+        return uri
+
+    monkeypatch.setattr(pipeline, "write_parquet", lossy)
+    cfg = PipelineConfig(
+        sink_dir=str(tmp_path / "out"),
+        rows_per_partition=500,
+        pk_by_table={"orders": "o_orderkey"},
+    )
+    with StateStore(str(tmp_path / "state")) as store:
+        summary = run_pipeline(spark, {"orders": load_table(spark, sf_smoke, "orders")}, cfg, store)
+    t = summary["tables"]["orders"]
+    assert summary["n_errors"] == 0, summary["errors"]
+    assert t["partitions"] == 3 and 0 < t["rows_loaded"] < t["rows"]
+    assert t["consistent"] is False and summary["all_consistent"] is False
+
+
 def test_jdbc_scan_options():
     src = JdbcSource(url="jdbc:sqlserver://h;db=x", table="dbo.t")
     bounds = PartitionPlan(strategy="bounds", partitions=8, column="id", lower=1, upper=100)

@@ -271,6 +271,36 @@ def test_format_matrix_roundtrip(spark, sf_smoke, tmp_path):
         write_format(orders, str(tmp_path / "x"), "avro")
 
 
+@pytest.mark.parametrize("writer", ["write_parquet", "write_ndjson"])
+def test_one_file_sink_needs_no_exchange(spark, sf_smoke, tmp_path, writer):
+    """partitions=1 over a one-partition scan is a coalesce: one part
+    file, one job, no shuffle. partitions=1 over a three-partition scan
+    keeps the exchange, so the scan still runs as three tasks, and
+    partitions=3 still balances the rows into three files."""
+    from dumpty_spark.sinks import writers
+    from dumpty_spark.session import jobs_after, last_job_id
+
+    write = getattr(writers, writer)
+    orders = load_table(spark, sf_smoke, "orders")
+    assert orders.rdd.getNumPartitions() == 1
+    mark = last_job_id(spark)
+    one = write(orders, str(tmp_path / "one"), partitions=1)
+    jobs = jobs_after(spark, mark)
+    assert len(glob.glob(one)) == 1
+    assert len(jobs) == 1 and jobs[0]["shuffle_bytes"] == 0
+
+    orders.repartition(3).write.parquet(str(tmp_path / "split"))
+    split = spark.read.parquet(str(tmp_path / "split"))
+    assert split.rdd.getNumPartitions() == 3
+    mark = last_job_id(spark)
+    merged = write(split, str(tmp_path / "merged"), partitions=1)
+    assert len(glob.glob(merged)) == 1
+    assert sum(j["shuffle_bytes"] for j in jobs_after(spark, mark)) > 0
+
+    three = write(orders, str(tmp_path / "three"), partitions=3)
+    assert len(glob.glob(three)) == 3
+
+
 def test_delete_keys_rewrites_only_hit_files(spark, sf_smoke, tmp_path):
     """Targeted delete: only files containing the keys are rewritten (by
     mtime), a fully-matching file is removed, other files' bytes are
