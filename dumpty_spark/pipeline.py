@@ -17,7 +17,6 @@ the small ones.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -28,12 +27,14 @@ from pyspark.sql import functions as F
 
 from dumpty_spark.plans.planner import (
     PartitionPlan,
+    TableStats,
     exact_julienne_boundaries,
     introspect_stats,
     introspect_stats_fast,
     plan_partitions,
 )
 from dumpty_spark.plans.state import StateStore, TableState
+from dumpty_spark.plans.types import normalize_df
 from dumpty_spark.sinks.writers import (
     advise_partitions,
     sink_size_bytes,
@@ -41,7 +42,7 @@ from dumpty_spark.sinks.writers import (
     write_parquet,
     write_schema_sidecar,
 )
-from dumpty_spark.plans.types import normalize_df
+from dumpty_spark.sources.jdbc import introspect_jdbc, scanned
 
 
 @dataclass
@@ -73,44 +74,31 @@ def _process_table(
     state = store.get_table(name) or TableState(name=name)
     pk = cfg.pk_by_table.get(name)
 
-    # introspect (I3: reuse within TTL)
+    # introspect (I3: reuse within TTL). A JDBC scan names its source and
+    # runs its own plan: introspect the source on the driver and record
+    # that plan. Any other frame is introspected itself (parquet footers
+    # under fastcount) and planned.
     if not state.introspection_fresh(cfg.introspection_ttl_s):
-        stats = None
-        if cfg.fastcount and cfg.source_dir:
-            src_path = os.path.join(cfg.source_dir, f"{name}.parquet")
-            if os.path.exists(src_path):
-                stats = introspect_stats_fast(src_path, pk)
-        if stats is None:
-            stats = introspect_stats(df, pk)
+        jdbc_scan = scanned(df)
+        if jdbc_scan is not None:
+            stats = introspect_jdbc(spark, jdbc_scan[0], pk)
+        else:
+            stats = None
+            if cfg.fastcount and cfg.source_dir:
+                src_path = os.path.join(cfg.source_dir, f"{name}.parquet")
+                if os.path.exists(src_path):
+                    stats = introspect_stats_fast(src_path, pk)
+            if stats is None:
+                stats = introspect_stats(df, pk)
         state.rows = stats.rows
         state.min, state.max = stats.min, stats.max
         state.introspect_ts = time.time()
-        boundaries = None
-        partitions_hint = state.advised_partitions
-        plan = None
-        if pk is not None and stats.rows and stats.rows > 0:
-            try:
-                plan = plan_partitions(
-                    stats, cfg.rows_per_partition, partitions_override=partitions_hint
-                )
-            except ValueError:
-                width = max(1, stats.rows // max(1, round(stats.rows / cfg.rows_per_partition)))
-                boundaries = exact_julienne_boundaries(df, pk, width)
-                plan = plan_partitions(
-                    stats,
-                    cfg.rows_per_partition,
-                    partitions_override=partitions_hint,
-                    boundaries=boundaries,
-                )
-        if plan is None:
-            plan = PartitionPlan(strategy="single")
+        plan = jdbc_scan[1] if jdbc_scan else _plan(df, pk, stats, cfg, state.advised_partitions)
         state.strategy = plan.strategy
         state.partition_column = plan.column
         state.partitions = plan.partitions
         state.predicates = plan.predicates or None
 
-    # extract (the fixture source is already a DataFrame; a JDBC source
-    # would run sources.jdbc.scan with the same plan)
     out = normalize_df(df) if cfg.normalize_schema else df
     # X7 counter rides the write job itself (Observation): zero extra
     # jobs, the Spark analog of the reference's load-job-reported
@@ -118,7 +106,12 @@ def _process_table(
     obs = Observation(f"extract:{name}")
     out = out.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     path = f"{cfg.sink_dir}/{name}"
-    n_parts = state.advised_partitions or state.partitions or None
+    # files: last run's size advice, else one per planned slice, and at
+    # least one per rows_per_partition rows, so a large table read
+    # through one cursor still encodes in parallel
+    n_parts = state.advised_partitions or max(
+        state.partitions or 1, round((state.rows or 0) / cfg.rows_per_partition)
+    )
     if cfg.sink_format == "json":
         glob_uri = write_ndjson(out, path, partitions=n_parts)
     else:
@@ -136,18 +129,39 @@ def _process_table(
     # after the write shows up as missing rows
     if cfg.sink_format == "json":
         state.rows_loaded = int(obs.get["rows_written"])
-        produced_default = None
     else:
         state.rows_loaded = introspect_stats_fast(path).rows
-        produced_default = len(glob.glob(glob_uri))
 
     # size feedback (X6)
     state.sink_bytes = with_retries(sink_size_bytes, glob_uri)
-    produced = n_parts or produced_default or 1
-    state.advised_partitions = advise_partitions(state.sink_bytes, produced)
+    state.advised_partitions = advise_partitions(state.sink_bytes, n_parts)
 
     store.put_table(state)
     return state
+
+
+def _plan(
+    df: DataFrame,
+    pk: str | None,
+    stats: TableStats,
+    cfg: PipelineConfig,
+    partitions_hint: int | None,
+) -> PartitionPlan:
+    """X8 for a frame that is not a JDBC scan: the plan only sizes the
+    sink, so a skewed key's julienne boundaries are computed over the
+    frame itself."""
+    if pk is None or not stats.rows:
+        return PartitionPlan(strategy="single")
+    try:
+        return plan_partitions(stats, cfg.rows_per_partition, partitions_override=partitions_hint)
+    except ValueError:
+        width = max(1, stats.rows // max(1, round(stats.rows / cfg.rows_per_partition)))
+        return plan_partitions(
+            stats,
+            cfg.rows_per_partition,
+            partitions_override=partitions_hint,
+            boundaries=exact_julienne_boundaries(df, pk, width),
+        )
 
 
 def with_retries(

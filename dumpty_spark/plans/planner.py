@@ -12,11 +12,14 @@ src/dumpty/pipeline.py:359-400 and README.md:23-39) Spark-first:
 - **single** — too small, or too few distinct keys (<10% boundary yield).
 
 Scale note: the reference computes boundaries with a global
-``ROW_NUMBER() OVER (ORDER BY pk)`` (pipeline.py:243) — pushed to MSSQL
-there, but a single-task bottleneck if translated naively to Spark. Our
-default boundary computation is ``approxQuantile`` (Greenwald-Khanna,
-fully distributed, one pass); ``exact_julienne_boundaries`` keeps the
-reference's exact semantics for parity tests and small tables.
+``ROW_NUMBER() OVER (ORDER BY pk)`` (pipeline.py:243), pushed to MSSQL.
+Against a JDBC source the same query runs on the database
+(``sources.jdbc.julienne_boundaries_jdbc``). Over a DataFrame,
+``exact_julienne_boundaries`` keeps the reference's exact semantics with
+a global window, which is one task at the sort boundary; the pipeline
+uses it to size the sink of a skewed-key frame that is not a JDBC scan.
+``approx_boundaries`` (``approxQuantile``, Greenwald-Khanna, fully
+distributed, one pass) is the alternative for frames too large for that.
 """
 
 from __future__ import annotations

@@ -33,25 +33,25 @@ TARGET_PARTITION_BYTES = 50 * 1024 * 1024  # reference config.py:53
 
 def _sized(df: DataFrame, partitions: int | None) -> DataFrame:
     """Shape ``df`` into ``partitions`` output files (None: as it comes).
-    One file from an input that already reads as one partition is a
-    ``coalesce(1)``: every row already ends in one writer task, so a
-    round-robin exchange — a shuffle-map job, plus the local sort Spark
-    runs before it — buys nothing. Any other input keeps the exchange:
-    ``coalesce(1)`` would pull its scan and encode into that one task,
-    where ``repartition`` runs them in parallel."""
-    if partitions == 1 and _reads_as_one_partition(df):
-        return df.coalesce(1)
-    return df.repartition(partitions) if partitions else df
+    An input that already reads as that many partitions is written as it
+    comes: each of its tasks scans, encodes and writes one file, and a
+    round-robin exchange would buy only a shuffle-map job and the local
+    sort Spark runs before it. Any other input is ``repartition``ed, so
+    its scan and its encode both run in parallel — ``coalesce`` would
+    pull a multi-partition scan into fewer tasks."""
+    if not partitions or _partition_count(df) == partitions:
+        return df
+    return df.repartition(partitions)
 
 
-def _reads_as_one_partition(df: DataFrame) -> bool:
-    """Whether ``df``'s physical plan yields one partition, answered by
+def _partition_count(df: DataFrame) -> int | None:
+    """How many partitions ``df``'s physical plan yields, answered by
     planning alone. A plan AQE wraps holds an exchange or a subquery, and
-    asking its partition count would run them, so it counts as many."""
+    asking its partition count would run them, so it gives None."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan" or not plan.subqueriesAll().isEmpty():
-        return False
-    return plan.execute().getNumPartitions() == 1
+        return None
+    return plan.execute().getNumPartitions()
 
 
 def write_ndjson(

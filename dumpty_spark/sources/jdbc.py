@@ -2,6 +2,13 @@
 parameterized by a PartitionPlan, plus the catalog and change-tracking
 queries.
 
+Metadata SQL (introspection, the catalog list, the change log and the
+julienne boundary query) runs on the driver over one JDBC connection and
+starts no Spark job, as the reference runs it from its host
+(pipeline.py:328-339); only table rows go through ``scan``. ``scanned``
+reads a scan's source and plan back off the frame, so a caller handed a
+frame can introspect its source and record the plan it runs.
+
 The full introspect → plan → scan → sink loop is exercised END-TO-END
 against an embedded Apache Derby database (ships on the Spark classpath)
 in tests/test_jdbc_e2e.py: live cursors, all three scan strategies, the
@@ -16,11 +23,20 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from dumpty_spark.plans.planner import PartitionPlan
+from dumpty_spark.plans.planner import PartitionPlan, TableStats
 
 DEFAULT_FETCHSIZE = 2000  # reference config.yaml.example:52
+DIRTY_READ = "SET TRANSACTION ISOLATION LEVEL READ UNCOMMITTED"
+
+# java.sql.Types codes: the ones Spark reads as a NumericType (TINYINT,
+# SMALLINT, INTEGER, BIGINT, FLOAT, REAL, DOUBLE, NUMERIC, DECIMAL), and
+# the two it converts from java.sql objects
+_NUMERIC_TYPES = frozenset({-6, 5, 4, -5, 6, 7, 8, 2, 3})
+_DATE, _TIMESTAMP = 91, 93
 
 
 @dataclass
@@ -40,9 +56,7 @@ class JdbcSource:
         }
         if self.dirty_read:
             # don't lock the source: READ UNCOMMITTED, like the reference
-            opts["sessionInitStatement"] = (
-                "SET TRANSACTION ISOLATION LEVEL READ UNCOMMITTED"
-            )
+            opts["sessionInitStatement"] = DIRTY_READ
         return opts
 
 
@@ -79,11 +93,68 @@ def scan(spark: SparkSession, src: JdbcSource, plan: PartitionPlan) -> DataFrame
     return reader.load()
 
 
+# options ``scan`` sets from the source and the plan, not from properties
+_SCAN_KEYS = frozenset({
+    "url", "dbtable", "query", "fetchsize",
+    "partitioncolumn", "lowerbound", "upperbound", "numpartitions",
+})
+
+
+def scanned(df: DataFrame) -> tuple[JdbcSource, PartitionPlan] | None:
+    """The inverse of ``scan``: the source and plan a bare JDBC scan
+    reads, taken off its analyzed plan (``JDBCRelation.jdbcOptions()`` and
+    ``parts()``), so the plan is the one the scan runs — its slice count
+    and where-clauses. A frame with anything on top of the relation (a
+    filter, a projection) may not read what its source holds, so it
+    gives None, as does any frame that is not a JDBC scan. A predicates
+    plan comes back without its column and boundaries, which the scan
+    does not keep."""
+    node = df._jdf.queryExecution().analyzed()
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if rel.getClass().getSimpleName() != "JDBCRelation":
+        return None
+    jopts = rel.jdbcOptions()
+    props = dict(jopts.asProperties())  # the options as given, keys in their case
+    opt = {k.lower(): v for k, v in props.items()}
+    dirty = opt.get("sessioninitstatement") == DIRTY_READ
+    skip = _SCAN_KEYS | ({"sessioninitstatement"} if dirty else set())
+    src = JdbcSource(
+        url=jopts.url(),
+        table=jopts.tableOrQuery(),
+        properties={k: v for k, v in props.items() if k.lower() not in skip},
+        fetchsize=jopts.fetchSize(),
+        dirty_read=dirty,
+    )
+    where = [p.whereClause() for p in rel.parts()]
+    if where == [None]:
+        plan = PartitionPlan(strategy="single")
+    elif "partitioncolumn" in opt:
+        plan = PartitionPlan(
+            strategy="bounds",
+            partitions=len(where),
+            column=opt["partitioncolumn"],
+            lower=_bound(opt["lowerbound"]),
+            upper=_bound(opt["upperbound"]),
+        )
+    else:
+        plan = PartitionPlan(strategy="predicates", partitions=len(where), predicates=where)
+    return src, plan
+
+
+def _bound(v: str) -> Any:
+    """A bound option back as the int the planner gave, or as written."""
+    try:
+        return int(v)
+    except ValueError:
+        return v
+
+
 def _query_source(src: JdbcSource, sql: str) -> JdbcSource:
     """A JdbcSource whose dbtable is a derived-table subquery, so the SQL
     executes INSIDE the database and only its (tiny) result crosses the
-    wire — how the reference pushes introspection to the source instead
-    of pulling rows (pipeline.py:328-339)."""
+    wire."""
     return JdbcSource(
         url=src.url,
         table=f"({sql}) dumpty_q",
@@ -95,42 +166,76 @@ def _query_source(src: JdbcSource, sql: str) -> JdbcSource:
 
 def run_query(spark: SparkSession, src: JdbcSource, sql: str) -> DataFrame:
     """Run ``sql`` on the source database through one JDBC cursor and
-    return the result as a DataFrame (single partition — meant for
-    metadata-sized results: counts, catalogs, change logs)."""
-    from dumpty_spark.plans.planner import PartitionPlan
-
+    return the result as a one-partition DataFrame, read by a Spark job.
+    Metadata-sized results the caller only collects go through
+    ``_fetch`` instead, which starts no job."""
     return scan(spark, _query_source(src, sql), PartitionPlan(strategy="single"))
 
 
-def introspect_jdbc(spark: SparkSession, src: JdbcSource, pk: str | None):
-    """SURVEY A1 against a live source: COUNT/MIN/MAX pushed down as ONE
-    SQL statement executed by the database (reference pipeline.py:328-339
-    runs exactly this query server-side). Returns TableStats ready for
-    ``plan_partitions``. Never pulls table rows through the wire."""
-    from dumpty_spark.plans.planner import TableStats
-
-    # positional access: databases fold unquoted aliases to their own
-    # preferred case (Derby: upper), so names are not portable here.
-    if pk is None:
-        row = run_query(
-            spark, src, f"SELECT COUNT(*) AS n_rows FROM {src.table}"
-        ).collect()[0]
-        return TableStats(rows=row[0])
-    row = run_query(
-        spark,
-        src,
-        f"SELECT COUNT(*) AS n_rows, MIN({pk}) AS mn, MAX({pk}) AS mx FROM {src.table}",
-    ).collect()[0]
-    df = run_query(spark, src, f"SELECT {pk} FROM {src.table} WHERE 1=0")
-    from pyspark.sql import types as T
-
-    # positional here too: the probe selects only the pk column, and the
-    # database folds the unquoted identifier to its own case (Derby upper,
-    # Postgres lower) so df.schema[pk] would KeyError on a non-folded name.
-    numeric = isinstance(df.schema.fields[0].dataType, T.NumericType)
-    return TableStats(
-        rows=row[0], min=row[1], max=row[2], pk=pk, pk_numeric=numeric
+def _fetch(spark: SparkSession, src: JdbcSource, sql: str) -> tuple[list[int], list[tuple]]:
+    """Run ``sql`` on the source database from the driver, over one JDBC
+    connection opened the way Spark's scan tasks open theirs (the URL's
+    dialect and connection provider, the source's options), with the
+    ``sessionInitStatement`` run first when one is set. Returns the
+    result's java.sql.Types column codes and its rows, with values
+    converted as ``run_query(...).collect()`` gives them. Starts no
+    Spark job: for metadata-sized results only."""
+    jvm = spark.sparkContext._jvm
+    opts = src.options()
+    params = jvm.java.util.HashMap()
+    for k, v in opts.items():
+        params.put(k, str(v))
+    jopts = jvm.org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions(
+        jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(params)
     )
+    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(src.url)
+    conn = dialect.createConnectionFactory(jopts).apply(-1)
+    try:
+        st = conn.createStatement()
+        if opts.get("sessionInitStatement"):
+            st.execute(opts["sessionInitStatement"])
+        rs = st.executeQuery(sql)
+        md = rs.getMetaData()
+        types = [md.getColumnType(i) for i in range(1, md.getColumnCount() + 1)]
+        rows = []
+        while rs.next():
+            rows.append(tuple(_value(rs, i, t) for i, t in enumerate(types, 1)))
+        return types, rows
+    finally:
+        conn.close()
+
+
+def _value(rs, i: int, jdbc_type: int) -> Any:
+    """Column ``i`` of the current row as Spark's JDBC reader and
+    ``collect`` would give it. py4j already converts numbers, strings and
+    decimals; dates and timestamps go through Spark's internal day and
+    microsecond counts; any other Java object comes back as its
+    ``toString()``."""
+    if jdbc_type == _TIMESTAMP:
+        ts = rs.getTimestamp(i)
+        if ts is None:
+            return None
+        return T.TimestampType().fromInternal(ts.getTime() * 1000 + ts.getNanos() // 1000 % 1000)
+    if jdbc_type == _DATE:
+        d = rs.getDate(i)
+        return None if d is None else T.DateType().fromInternal(d.toLocalDate().toEpochDay())
+    v = rs.getObject(i)
+    return v.toString() if isinstance(v, JavaObject) else v
+
+
+def introspect_jdbc(spark: SparkSession, src: JdbcSource, pk: str | None) -> TableStats:
+    """SURVEY A1 against a live source: COUNT/MIN/MAX as ONE SQL statement
+    executed by the database (reference pipeline.py:328-339 runs exactly
+    this query), sent from the driver. Returns TableStats ready for
+    ``plan_partitions``; ``pk_numeric`` is the type of the MIN column in
+    the result's metadata. Never pulls table rows through the wire and
+    starts no Spark job."""
+    if pk is None:
+        _, rows = _fetch(spark, src, f"SELECT COUNT(*) FROM {src.table}")
+        return TableStats(rows=rows[0][0])
+    types, rows = _fetch(spark, src, f"SELECT COUNT(*), MIN({pk}), MAX({pk}) FROM {src.table}")
+    n, mn, mx = rows[0]
+    return TableStats(rows=n, min=mn, max=mx, pk=pk, pk_numeric=types[1] in _NUMERIC_TYPES)
 
 
 # S4: catalog/table-list scan. ANSI INFORMATION_SCHEMA by default (MSSQL,
@@ -157,9 +262,8 @@ def list_tables(
     (pipeline.py:577) as a catalog query on the live connection. Returns
     lowercase table names, sorted, matching the reconcile path's
     case-insensitive contract (validate.reconcile_table_lists)."""
-    df = run_query(spark, src, query.format(schema=schema))
-    name_col = df.columns[0]
-    return sorted(r[name_col].strip().lower() for r in df.collect())
+    _, rows = _fetch(spark, src, query.format(schema=schema))
+    return sorted(r[0].strip().lower() for r in rows)
 
 
 # W1 boundary query templates ({pk}/{table}/{width}). ROW_NUMBER is the
@@ -194,11 +298,8 @@ def julienne_boundaries_jdbc(
     crosses the wire. Semantics identical to
     planner.exact_julienne_boundaries on a DataFrame; at Spark-side
     scale use planner.approx_boundaries instead."""
-    df = run_query(
-        spark, src, query.format(pk=pk, table=src.table, width=width)
-    )
-    col = df.columns[0]
-    return sorted(r[col] for r in df.collect())
+    _, rows = _fetch(spark, src, query.format(pk=pk, table=src.table, width=width))
+    return sorted(r[0] for r in rows)
 
 
 def changed_tables_jdbc(
@@ -213,6 +314,5 @@ def changed_tables_jdbc(
     ``last_run``). The query must return one column of table names; the
     result feeds validate.select_incremental exactly like the filesystem
     mtime variant in cli.changed_tables."""
-    df = run_query(spark, src, query_template.format(watermark=watermark))
-    name_col = df.columns[0]
-    return sorted(r[name_col].strip().lower() for r in df.collect())
+    _, rows = _fetch(spark, src, query_template.format(watermark=watermark))
+    return sorted(r[0].strip().lower() for r in rows)

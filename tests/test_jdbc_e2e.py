@@ -11,7 +11,10 @@ metastore), so these tests run the whole loop over live JDBC cursors:
 - NULL-PK routing: a NULL key lands in exactly one predicate slice;
 - S4 catalog list via Derby's SYS tables (INFORMATION_SCHEMA analog);
 - S5 change-tracking query with watermark substitution;
-- scan -> NDJSON sink -> reconcile (the full pipeline round trip).
+- scan -> NDJSON sink -> reconcile (the full pipeline round trip);
+- driver-side introspection against the Spark-read answer, with no job;
+- ``scanned`` (a scan's source and plan read back off the frame) and
+  ``run_pipeline`` over scanned frames.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from dumpty_spark.plans.planner import (
     PartitionPlan,
@@ -26,14 +30,18 @@ from dumpty_spark.plans.planner import (
     plan_partitions,
 )
 from dumpty_spark.sources import load_table
+from dumpty_spark.sources import jdbc
 from dumpty_spark.sources.jdbc import (
+    DERBY_JULIENNE,
     DERBY_TABLES,
     JdbcSource,
     changed_tables_jdbc,
     introspect_jdbc,
+    julienne_boundaries_jdbc,
     list_tables,
     run_query,
     scan,
+    scanned,
 )
 
 SCHEMA = "APP"  # Derby's default schema
@@ -97,6 +105,13 @@ def derby(spark, sf_smoke, tmp_path_factory):
         "INSERT INTO change_log VALUES ('customer', 100)",
         "INSERT INTO change_log VALUES ('gappy', 300)",
         "INSERT INTO change_log VALUES ('customer', 350)",
+        # a TIMESTAMP key with sub-second values, and an empty table
+        "CREATE TABLE stamped (TS TIMESTAMP, K INT)",
+        "INSERT INTO stamped VALUES ('2024-02-29 23:59:59.123456', 1)",
+        "INSERT INTO stamped VALUES ('1999-12-31 00:00:00', 2)",
+        "INSERT INTO stamped VALUES ('2024-03-01 00:00:00.5', 3)",
+        "INSERT INTO stamped VALUES (NULL, 4)",
+        "CREATE TABLE empty_t (K BIGINT)",
     )
     n_cust = cust.count()
     return {"url": url, "n_cust": n_cust}
@@ -214,3 +229,141 @@ def test_julienne_boundaries_computed_server_side(spark, derby):
     assert sorted(map(tuple, df.fillna(-1).collect())) == sorted(
         map(tuple, full.fillna(-1).collect())
     )
+
+
+@pytest.mark.parametrize(
+    "table,pk,numeric",
+    [
+        ("customer", "C_CUSTKEY", True),  # BIGINT, dense
+        ("gappy", "GKEY", True),  # BIGINT, gappy, one NULL key
+        ("change_log", "table_name", False),  # VARCHAR
+        ("stamped", "TS", False),  # TIMESTAMP, sub-second, one NULL
+        ("empty_t", "K", True),  # no rows: COUNT 0, MIN/MAX NULL
+        ("customer", None, False),  # count only
+    ],
+)
+def test_introspect_jdbc_matches_spark_read_without_a_job(spark, derby, table, pk, numeric):
+    """Driver-side introspection gives what the same statement read
+    through Spark gives, and starts no Spark job."""
+    from dumpty_spark.session import jobs_after, last_job_id
+
+    src = _src(derby, table)
+    mark = last_job_id(spark)
+    stats = introspect_jdbc(spark, src, pk)
+    assert jobs_after(spark, mark) == []
+    if pk is None:
+        want = run_query(spark, src, f"SELECT COUNT(*) AS n FROM {table}").collect()[0]
+        assert (stats.rows, stats.min, stats.max, stats.pk) == (want[0], None, None, None)
+        return
+    want = run_query(
+        spark, src, f"SELECT COUNT(*) AS n, MIN({pk}) AS mn, MAX({pk}) AS mx FROM {table}"
+    ).collect()[0]
+    assert (stats.rows, stats.min, stats.max) == tuple(want)
+    assert type(stats.min) is type(want[1])
+    assert stats.pk == pk and stats.pk_numeric is numeric
+
+
+def test_introspect_jdbc_runs_the_session_init_statement(spark, derby, monkeypatch):
+    """A dirty-read source sends its isolation statement on the
+    introspection connection before the query: Derby has no SET
+    TRANSACTION, so it refuses the MSSQL one, and takes its own."""
+    dirty = JdbcSource(url=derby["url"], table="customer")
+    with pytest.raises(Py4JJavaError, match="TRANSACTION"):
+        introspect_jdbc(spark, dirty, "C_CUSTKEY")
+    monkeypatch.setattr(jdbc, "DIRTY_READ", "SET ISOLATION = UR")
+    assert jdbc._fetch(spark, dirty, "VALUES CURRENT ISOLATION")[1] == [("UR",)]
+    assert introspect_jdbc(spark, dirty, "C_CUSTKEY").rows == derby["n_cust"]
+
+
+def _plans(spark, derby) -> dict[str, tuple[JdbcSource, PartitionPlan]]:
+    """One plan of each strategy: a single cursor and four bounds over
+    customer, and server-side julienne predicates over gappy."""
+    cust, gappy = _src(derby, "customer"), _src(derby, "gappy")
+    bounds = plan_partitions(introspect_jdbc(spark, cust, "C_CUSTKEY"), partitions_override=4)
+    got = julienne_boundaries_jdbc(spark, gappy, "GKEY", 50, DERBY_JULIENNE)
+    preds = plan_partitions(
+        introspect_jdbc(spark, gappy, "GKEY"), partitions_override=len(got) + 1, boundaries=got
+    )
+    assert (bounds.strategy, preds.strategy) == ("bounds", "predicates")
+    return {
+        "single": (cust, PartitionPlan(strategy="single")),
+        "bounds": (cust, bounds),
+        "predicates": (gappy, preds),
+    }
+
+
+def test_scanned_round_trips_every_strategy(spark, derby, sf_smoke):
+    """``scanned`` gives back the source and the plan a scan was built
+    from (a predicates plan without the column and boundaries, which the
+    scan does not keep), and None for anything but a bare JDBC scan."""
+    dirty = JdbcSource(url=derby["url"], table="customer", properties={"create": "false"})
+    for src, plan in [*_plans(spark, derby).values(), (dirty, PartitionPlan(strategy="single"))]:
+        got_src, got_plan = scanned(scan(spark, src, plan))
+        assert got_src == src
+        if plan.strategy == "predicates":
+            plan.column, plan.boundaries = None, []
+        assert got_plan == plan
+    src, plan = _plans(spark, derby)["bounds"]
+    assert scanned(scan(spark, src, plan).filter("C_CUSTKEY > 3")) is None
+    assert scanned(scan(spark, src, plan).select("C_NAME")) is None
+    assert scanned(load_table(spark, sf_smoke, "customer")) is None
+
+
+def _jdbc_pipeline(spark, frames, tmp_path, rows_per_partition):
+    from dumpty_spark.pipeline import PipelineConfig, run_pipeline
+    from dumpty_spark.plans.state import StateStore
+
+    cfg = PipelineConfig(
+        sink_dir=str(tmp_path / "out"),
+        sink_format="json",
+        rows_per_partition=rows_per_partition,
+        workers=3,
+        pk_by_table={n: "GKEY" if n == "predicates" else "C_CUSTKEY" for n in frames},
+    )
+    store = StateStore(str(tmp_path / "state"))
+    return run_pipeline(spark, frames, cfg, store), store
+
+
+def test_pipeline_over_jdbc_scans_records_and_writes_each_scan(spark, derby, tmp_path):
+    """run_pipeline over JDBC scans records each scan's own plan and
+    introspects its source without a job. A bounds or predicates scan
+    whose slice count is the sink's file count is written as it reads,
+    with no shuffle; a single cursor over more than rows_per_partition
+    rows is spread over that many files."""
+    from dumpty_spark.session import jobs_after, last_job_id
+
+    plans = _plans(spark, derby)
+    frames = {name: scan(spark, src, plan) for name, (src, plan) in plans.items()}
+    # four slices for customer's bounds and gappy's predicates alike
+    rpp = derby["n_cust"] // 4
+    mark = last_job_id(spark)
+    summary, store = _jdbc_pipeline(spark, frames, tmp_path, rpp)
+    jobs = jobs_after(spark, mark)
+    assert summary["n_errors"] == 0, summary["errors"]
+    assert summary["all_consistent"]
+    for name, (_, plan) in plans.items():
+        st = store.get_table(name)
+        assert (st.strategy, st.partitions) == (plan.strategy, plan.partitions), name
+        assert st.predicates == (plan.predicates or None), name
+        mine = [j for j in jobs if j["description"] == f"extract:{name}"]
+        if name == "single":
+            assert sum(j["shuffle_bytes"] for j in mine) > 0
+        else:
+            assert plan.partitions == 4, name
+            assert len(mine) == 1 and mine[0]["shuffle_bytes"] == 0, (name, mine)
+    assert all(j["description"].startswith("extract:") for j in jobs)
+    assert summary["tables"]["single"]["rows"] == derby["n_cust"]
+
+
+def test_predicates_scan_that_misses_rows_is_inconsistent(spark, derby, tmp_path):
+    """The reconcile counts the source, not the frame: predicates that
+    leave out a slice write fewer rows than the table holds."""
+    src, plan = _plans(spark, derby)["predicates"]
+    plan.predicates = plan.predicates[:-2]
+    summary, _ = _jdbc_pipeline(
+        spark, {"predicates": scan(spark, src, plan)}, tmp_path, derby["n_cust"]
+    )
+    t = summary["tables"]["predicates"]
+    assert summary["n_errors"] == 0, summary["errors"]
+    assert t["rows"] == derby["n_cust"] + 1 and 0 < t["rows_loaded"] < t["rows"]
+    assert t["consistent"] is False

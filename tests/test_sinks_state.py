@@ -273,32 +273,33 @@ def test_format_matrix_roundtrip(spark, sf_smoke, tmp_path):
 
 @pytest.mark.parametrize("writer", ["write_parquet", "write_ndjson"])
 def test_one_file_sink_needs_no_exchange(spark, sf_smoke, tmp_path, writer):
-    """partitions=1 over a one-partition scan is a coalesce: one part
-    file, one job, no shuffle. partitions=1 over a three-partition scan
-    keeps the exchange, so the scan still runs as three tasks, and
-    partitions=3 still balances the rows into three files."""
+    """An input that already reads as the requested number of partitions
+    is written as it comes: one file per partition, one job, no shuffle
+    (one file over a one-partition scan, three over a three-split scan).
+    Any other count keeps the exchange: one file over the three-split
+    scan, so the scan still runs as three tasks, and three files over the
+    one-partition scan, so the rows are balanced."""
     from dumpty_spark.sinks import writers
     from dumpty_spark.session import jobs_after, last_job_id
 
     write = getattr(writers, writer)
     orders = load_table(spark, sf_smoke, "orders")
     assert orders.rdd.getNumPartitions() == 1
-    mark = last_job_id(spark)
-    one = write(orders, str(tmp_path / "one"), partitions=1)
-    jobs = jobs_after(spark, mark)
-    assert len(glob.glob(one)) == 1
-    assert len(jobs) == 1 and jobs[0]["shuffle_bytes"] == 0
-
     orders.repartition(3).write.parquet(str(tmp_path / "split"))
     split = spark.read.parquet(str(tmp_path / "split"))
     assert split.rdd.getNumPartitions() == 3
-    mark = last_job_id(spark)
-    merged = write(split, str(tmp_path / "merged"), partitions=1)
-    assert len(glob.glob(merged)) == 1
-    assert sum(j["shuffle_bytes"] for j in jobs_after(spark, mark)) > 0
 
-    three = write(orders, str(tmp_path / "three"), partitions=3)
-    assert len(glob.glob(three)) == 3
+    cases = [("one", orders, 1, False), ("three", split, 3, False),
+             ("merged", split, 1, True), ("spread", orders, 3, True)]
+    for name, df, n, exchange in cases:
+        mark = last_job_id(spark)
+        out = write(df, str(tmp_path / name), partitions=n)
+        jobs = jobs_after(spark, mark)
+        assert len(glob.glob(out)) == n
+        if exchange:
+            assert sum(j["shuffle_bytes"] for j in jobs) > 0
+        else:
+            assert len(jobs) == 1 and jobs[0]["shuffle_bytes"] == 0
 
 
 def test_delete_keys_rewrites_only_hit_files(spark, sf_smoke, tmp_path):
