@@ -43,11 +43,13 @@ DEFAULT_CONFS: dict[str, str] = {
     # nanos to micros, so both engines see identical values
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
-    # Python-worker daemon with numpy/pandas/pyarrow PRELOADED before
-    # fork (dumpty_spark/python_daemon.py): fresh workers inherit the
-    # initialized modules copy-on-write instead of each paying the
-    # ~1-2s import — the measured 63-fork wave inside one concurrent
-    # ANN audit stage becomes fork-priced. Env-overridable; an EMPTY
+    # Python-worker daemon (dumpty_spark/python_daemon.py) that makes a
+    # worker task pay only for its own work: numpy/pandas/pyarrow are
+    # PRELOADED before fork (fresh workers inherit them copy-on-write
+    # instead of each paying the ~1-2s import), that heap is frozen out
+    # of the per-task gc.collect() (16-35 ms a task), and on Python < 3.13
+    # an archive's zip directory is re-read only when the archive
+    # changed (0.13 s a task). Env-overridable; an EMPTY
     # SPARK_GRAFT_PY_DAEMON selects the stock daemon explicitly
     # (PythonWorkerFactory uses the conf value verbatim, so '' would
     # launch `python -m ''` and break every Python-worker stage —
