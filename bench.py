@@ -30,7 +30,7 @@ import sys
 import time
 
 from dumpty_spark.queries import REGISTRY
-from dumpty_spark.session import get_session
+from dumpty_spark.session import forget, get_session
 
 # ---------------------------------------------------------------------------
 # Early-session probes (VERDICT r9, next-round #1): any query the DRIVER's
@@ -93,16 +93,11 @@ def _cache_builders():
         vector._shared_ann_artifacts(spark, sf_dir, nlist=16)
         vector._shared_exact_topk(spark, sf_dir)
 
+    # pseudo-entry -> (build, the session.memo namespace it fills)
     return {
-        "shared_cache:pair_graph": (
-            lambda s, d: shared_graph.copurchase_pairs(s, d),
-            shared_graph._PAIR_CACHE,
-        ),
-        "shared_cache:jaccard_graph": (
-            lambda s, d: shared_graph.jaccard_pair_graph(s, d),
-            shared_graph._JACCARD_CACHE,
-        ),
-        "shared_cache:ann_artifacts": (_ann, vector._ANN_SHARED),
+        "shared_cache:pair_graph": (shared_graph.copurchase_pairs, "pairs"),
+        "shared_cache:jaccard_graph": (shared_graph.jaccard_pair_graph, "jaccard"),
+        "shared_cache:ann_artifacts": (_ann, "ann"),
     }
 
 
@@ -110,7 +105,7 @@ def prebuild_shared_caches(spark, sf_dir: str) -> dict[str, float]:
     """Build (and time) every session-shared derived artifact cold, in a
     fixed order. Returns {pseudo_query_name: seconds}."""
     out: dict[str, float] = {}
-    for name, (build, _store) in _cache_builders().items():
+    for name, (build, _namespace) in _cache_builders().items():
         t0 = time.perf_counter()
         build(spark, sf_dir)
         out[name] = round(time.perf_counter() - t0, 4)
@@ -135,8 +130,8 @@ def make_solo_timer(spark, sf_dir: str):
 
     def one(name: str) -> float:
         if name in builders:
-            build, store = builders[name]
-            store.clear()
+            build, namespace = builders[name]
+            forget(namespace)
             t0 = time.perf_counter()
             build(spark, sf_dir)
             elapsed = time.perf_counter() - t0
@@ -290,19 +285,33 @@ def adjudicate_flags(
     return standing, cleared
 
 
+def baseline_gated(sf, only: set[str] | None, base_doc: dict | None) -> bool:
+    """Whether a run is gated against ``base_doc`` (the committed
+    bench_baseline.json, None when there is none). The baseline is a
+    full-suite artifact at one SF, and a subset or another SF compared
+    against it would flag everything: such a run skips the regression
+    gate and the early probes, and writes suffixed side artifacts."""
+    return only is None and base_doc is not None and base_doc.get("sf") == sf
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
     # SPARK_GRAFT_BENCH_ONLY (r12, VERDICT r11 next-round #4): comma-
     # separated query names restrict the timed loop — the knob that lets
     # the ×10 scale leg time the expensive subset at a bigger SF without
-    # a 355-query session. With a subset (or any non-default sf_dir) the
-    # baseline regression gate and early probes are skipped: the
-    # committed baseline is a full-suite sf0.1 artifact and comparing a
-    # different SF/subset against it would flag everything. Default
-    # behavior (unset) is byte-identical to before.
+    # a 355-query session. Only a full run at the baseline's SF is gated
+    # (baseline_gated).
     only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip()
     only = {q for q in only_env.split(",") if q} if only_env else None
+    here = os.path.dirname(os.path.abspath(__file__))
+    baseline_path = os.path.join(here, "bench_baseline.json")
+    base_doc = None
+    if os.path.exists(baseline_path):
+        with open(baseline_path) as fh:
+            base_doc = json.load(fh)
+    gated = baseline_gated(sf, only, base_doc)
     spark = get_session("dumpty-spark-bench")
 
     # JVM/codegen + Python-worker warmup on the smallest SF so per-query
@@ -321,7 +330,7 @@ def main() -> int:
     # the freshest window the session has (post-warmup, post-prebuild,
     # pre-suite, min of two) — evidence for mechanical flag disposition
     early_probes: dict[str, float] = {}
-    for name in _EARLY_PROBES if only is None else ():
+    for name in _EARLY_PROBES if gated else ():
         if name in REGISTRY:
             runs = []
             for _ in range(2):
@@ -375,7 +384,7 @@ def main() -> int:
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
         # non-pseudo registry entries; the 3 "shared_cache:*" keys inside
         # "queries" are gated cache-build pseudo-entries, counted apart
         "n_queries": sum(1 for k in timings if not k.startswith("shared_cache:")),
@@ -396,13 +405,9 @@ def main() -> int:
     }
 
     # regression gate vs the committed prior-round baseline
-    here = os.path.dirname(os.path.abspath(__file__))
-    baseline_path = os.path.join(here, "bench_baseline.json")
     regressions: dict = {}
     clear_streaks: dict[str, int] = {}
-    if only is None and os.path.exists(baseline_path):
-        with open(baseline_path) as fh:
-            base_doc = json.load(fh)
+    if gated:
         baseline = base_doc.get("queries", {})
         candidates = find_regressions(timings, baseline)
         standing, cleared = adjudicate_flags(
@@ -455,9 +460,9 @@ def main() -> int:
         "suite_len": len(suite_order),
     }
     detail["window"] = window
-    # subset runs (SPARK_GRAFT_BENCH_ONLY) must not clobber the
+    # ungated runs (a subset, another SF) must not clobber the
     # committed full-suite side artifacts
-    sfx = "" if only is None else "_subset"
+    sfx = "" if gated else "_subset" if only is not None else f"_sf{sf}"
     with open(os.path.join(here, f"BENCH_DETAIL{sfx}.json"), "w") as fh:
         fh.write(json.dumps(detail) + "\n")
     with open(os.path.join(here, f"BENCH_SUMMARY{sfx}.json"), "w") as fh:

@@ -39,11 +39,6 @@ def word_count(col: Column | str) -> Column:
     return F.size(words(col))
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(c, F.lit(PUNCT_RE))
@@ -61,14 +56,6 @@ def stopword_count(col: Column | str, lang: str = "en") -> Column:
 
 def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     return stopword_count(col, lang) / F.nullif(word_count(col), F.lit(0))
-
-
-def avg_word_len(col: Column | str) -> Column:
-    w = words(col)
-    total = F.aggregate(
-        F.transform(w, lambda x: F.length(x)), F.lit(0), lambda acc, x: acc + x
-    )
-    return total / F.nullif(F.size(w), F.lit(0))
 
 
 def lang_id(col: Column | str) -> Column:

@@ -141,12 +141,8 @@ def sampled_betweenness(
     ).localCheckpoint()
     from dumpty_spark.operators import telemetry
 
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("betweenness", "driver", n_edges)
+    if telemetry.two_regime("betweenness", e.count(), driver_max_edges):
         return _brandes_driver(e, sources, max_depth)
-    telemetry.record("betweenness", "distributed", n_edges)
     spark = e.sparkSession
 
     # ---- forward: level-synchronous BFS with exact path counts -------

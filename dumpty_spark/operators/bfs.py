@@ -81,12 +81,8 @@ def bounded_bfs(
     ).localCheckpoint()
     from dumpty_spark.operators import telemetry
 
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("bounded_bfs", "driver", n_edges)
+    if telemetry.two_regime("bounded_bfs", e.count(), driver_max_edges):
         return _bfs_driver(e, sources, n_hops)
-    telemetry.record("bounded_bfs", "distributed", n_edges)
     spark = e.sparkSession
     visited = spark.createDataFrame(
         [(s, s, 0) for s in sources], ["src", "node", "dist"]

@@ -29,11 +29,6 @@ from pyspark.sql import functions as F
 from dumpty_spark.functions.text import shingles, words
 
 
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """E1: drop exact duplicates on ``subset`` (hash shuffle on the key)."""
-    return df.dropDuplicates(subset)
-
-
 def dedup_keep_first(
     df: DataFrame, keys: list[str], order_cols: list[str]
 ) -> DataFrame:
@@ -331,9 +326,7 @@ def connected_components(
     from dumpty_spark.operators import telemetry
 
     n_sym = 2 * base.count()  # cheap: base is checkpointed
-    if (driver_max_edges and n_sym <= 2 * driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("connected_components", "driver", n_sym)
+    if telemetry.two_regime("connected_components", n_sym, 2 * driver_max_edges):
         parent: dict = {}
 
         def find(x):
@@ -364,7 +357,6 @@ def connected_components(
                 "cluster_id", base.schema["src"].dataType
             )
         )
-    telemetry.record("connected_components", "distributed", n_sym)
     telemetry.LAST["connected_components"]["algorithm"] = algorithm
 
     def _star_result() -> DataFrame:

@@ -105,12 +105,8 @@ def pagerank(
     e = _ckpt(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     from dumpty_spark.operators import telemetry
 
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("pagerank", "driver", n_edges)
+    if telemetry.two_regime("pagerank", e.count(), driver_max_edges):
         return _pagerank_driver(e, damping, n_iter)
-    telemetry.record("pagerank", "distributed", n_edges)
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -250,12 +246,8 @@ def label_propagation(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint()
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("label_propagation", "driver", n_edges)
+    if telemetry.two_regime("label_propagation", e.count(), driver_max_edges):
         return _lpa_driver(e, n_rounds)
-    telemetry.record("label_propagation", "distributed", n_edges)
     labels = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -365,12 +357,8 @@ def personalized_pagerank(
     seed_list = [r[0] for r in seeds.select(seeds.columns[0]).collect()]
     if not seed_list:
         raise ValueError("personalized_pagerank: empty seed set")
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("personalized_pagerank", "driver", n_edges)
+    if telemetry.two_regime("personalized_pagerank", e.count(), driver_max_edges):
         return _ppr_driver(e, seed_list, damping, n_iter)
-    telemetry.record("personalized_pagerank", "distributed", n_edges)
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -496,11 +484,10 @@ def anf_estimates(
     )
     from dumpty_spark.operators import telemetry
 
-    n_nodes = nodes.count()  # the regime gate, counted BEFORE any round
-    small = (
-        n_nodes <= broadcast_max_nodes and not telemetry.force_distributed()
+    # the regime gate, counted BEFORE any round
+    small = telemetry.two_regime(
+        "anf", nodes.count(), broadcast_max_nodes, small="broadcast"
     )
-    telemetry.record("anf", "broadcast" if small else "distributed", n_nodes)
     cur = nodes.select("node", *[mask(j) for j in range(k_masks)])
     # self-loops let one union'd join carry both "keep my own mask"
     # and "absorb my neighbors'" through a single bit_or groupBy

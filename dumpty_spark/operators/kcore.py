@@ -97,12 +97,8 @@ def kcore(
     )
     from dumpty_spark.operators import telemetry
 
-    n_edges = e.count()
-    if (driver_max_edges > 0 and n_edges <= driver_max_edges
-            and not telemetry.force_distributed()):
-        telemetry.record("kcore", "driver", n_edges)
+    if telemetry.two_regime("kcore", e.count(), driver_max_edges):
         return _kcore_driver(e, k)
-    telemetry.record("kcore", "distributed", n_edges)
     for _ in range(max_iter):
         sym = e.select("u", "v").union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -1,23 +1,30 @@
-"""Execution-regime telemetry for the two-regime iterative operators.
+"""Execution-regime telemetry for the two-regime operators.
 
-``connected_components`` and ``pagerank`` each pick between a driver-side
-fast path (tiny inputs: avoids per-round job latency) and the distributed
-loop (the 100 TB path). The choice is an internal planning decision, which
-made the round-2 scale story unverifiable from the outside: nothing could
-*observe* that a ×10 input actually crossed the gate. This module is that
-observation point — each operator records which regime it took, keyed by
-operator name, and the scale sweep / regime tests read it back.
+Nine operators pick between a small-input fast path and the distributed
+loop (the 100 TB path): ``bounded_bfs``, ``kcore``, ``betweenness``,
+``pagerank``, ``label_propagation``, ``personalized_pagerank`` and
+``connected_components`` run driver-side below their edge limit,
+``anf`` broadcasts its mask frame below its node limit, and
+``covariance_spectrum`` iterates on the driver below its matrix-entry
+limit. The choice is an internal planning decision, which made the
+round-2 scale story unverifiable from the outside: nothing could
+*observe* that a ×10 input actually crossed the gate. Every gate goes
+through :func:`two_regime`, which decides and records the regime taken,
+keyed by operator name; the scale sweep and the regime tests read it
+back from ``LAST``.
 
-Deliberately a plain module-level dict (no locks): the recorders run on
-the driver only, and concurrent driver-side operator launches within one
-process are not a supported pattern for the iterative operators anyway.
+``LAST`` is a plain module-level dict written only on the driver, and it
+keeps the last record per operator. Registry queries may run on
+concurrent driver threads (``run_overlapped``): two launches of one
+operator at once leave whichever record came last, so a test that reads
+``LAST`` runs the operator on one thread.
 """
 
 from __future__ import annotations
 
 import os
 
-# operator name -> {"regime": "driver"|"distributed", "size": int}
+# operator name -> {"regime": "driver"|"broadcast"|"distributed", "size": int}
 LAST: dict[str, dict] = {}
 
 
@@ -34,3 +41,13 @@ def force_distributed() -> bool:
 
 def record(op: str, regime: str, size: int) -> None:
     LAST[op] = {"regime": regime, "size": size}
+
+
+def two_regime(op: str, n: int, limit: int, small: str = "driver") -> bool:
+    """The gate every two-regime operator applies: True (take the
+    ``small`` path) when ``0 < limit`` and ``n <= limit`` and the
+    distributed path is not forced. Records the regime taken and ``n``
+    under ``op``. Pass ``limit`` 0 to force the distributed path."""
+    fast = limit > 0 and n <= limit and not force_distributed()
+    record(op, small if fast else "distributed", n)
+    return fast

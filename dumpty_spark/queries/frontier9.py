@@ -171,7 +171,7 @@ def q_covariance_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_ct = ct.count()  # cheap: ct is checkpointed; d(d+1)/2-sized
     degenerate = False
-    if n_ct <= 200_000 and not telemetry.force_distributed():
+    if telemetry.two_regime("covariance_spectrum", n_ct, 200_000):
         import math
 
         ent = [(r["i"], r["j"], r["c"]) for r in ct.collect()]
@@ -203,7 +203,6 @@ def q_covariance_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             dv = {j: round_half_up(x / mx, 9) for j, x in w.items()}
         if not degenerate:
-            telemetry.record("covariance_spectrum", "driver", n_ct)
             quad_v = math.fsum(c * dv[i] * dv[j] for i, j, c in full)
             vv_v = math.fsum(x * x for x in dv.values())
             tr_v = math.fsum(c for i, j, c in ent if i == j)
@@ -220,7 +219,7 @@ def q_covariance_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "top_eigenvalue double, trace double, explained_share double, "
                 "top_dim int",
             )
-    telemetry.record("covariance_spectrum", "distributed", n_ct)
+        telemetry.record("covariance_spectrum", "distributed", n_ct)
     # mirror the upper triangle in ONE pass (a union with a transformed
     # self trips a Catalyst constraint-rewrite on checkpointed lineage)
     entry = F.struct(F.col("i"), F.col("j"), F.col("c"))

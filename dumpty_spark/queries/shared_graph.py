@@ -7,8 +7,8 @@ Building it costs one orderkey shuffle + a map-side explode + a distinct
 exchange (~4s at sf0.1) — per QUERY before this cache, once per
 (session, sf_dir) after, exactly what a production deployment does by
 materializing the pair graph as a table. localCheckpoint blocks are
-reclaimed with the session; keying on applicationId guarantees a new
-SparkSession never sees another session's blocks. Every consumer's
+reclaimed with the session; ``session.memo`` keys on the session, so a
+new SparkSession never sees another session's blocks. Every consumer's
 RESULT is unchanged: they all start from the same distinct pair set.
 """
 
@@ -17,21 +17,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dumpty_spark.session import memo
 from dumpty_spark.sources.parquet import load_table
-
-_PAIR_CACHE: dict[tuple, DataFrame] = {}
 
 
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct canonical (u < v) part co-purchase pairs, checkpointed
     once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_CACHE:
+
+    def build():
         li = load_table(spark, sf_dir, "lineitem")
         baskets = li.groupBy("l_orderkey").agg(
             F.sort_array(F.collect_set("l_partkey")).alias("parts")
         )
-        pairs = (
+        return (
             baskets.select(
                 F.explode(
                     F.expr(
@@ -45,19 +44,14 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
-        for k in [k for k in _PAIR_CACHE if k[0] != key[0]]:
-            del _PAIR_CACHE[k]
-        _PAIR_CACHE[key] = pairs
-    return _PAIR_CACHE[key]
+
+    return memo(spark, ("pairs", sf_dir), build)
 
 
 def copurchase_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both-direction edge view of the cached pairs (map-side union)."""
     p = copurchase_pairs(spark, sf_dir)
     return p.unionAll(p.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-
-_JACCARD_CACHE: dict[tuple, DataFrame] = {}
 
 
 def jaccard_pair_graph(
@@ -72,13 +66,10 @@ def jaccard_pair_graph(
     stage reads it."""
     from dumpty_spark.operators import dedup as D
 
-    key = (spark.sparkContext.applicationId, sf_dir, k, float(threshold))
-    if key not in _JACCARD_CACHE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        frame = D.jaccard_pairs(
+        return D.jaccard_pairs(
             docs, "doc_id", "text", k=k, threshold=threshold
         ).localCheckpoint()
-        for kk in [kk for kk in _JACCARD_CACHE if kk[0] != key[0]]:
-            del _JACCARD_CACHE[kk]
-        _JACCARD_CACHE[key] = frame
-    return _JACCARD_CACHE[key]
+
+    return memo(spark, ("jaccard", sf_dir, k, float(threshold)), build)

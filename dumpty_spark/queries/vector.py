@@ -2,14 +2,13 @@
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dumpty_spark.operators import multimodal as M
 from dumpty_spark.operators import similarity as S
 from dumpty_spark.queries import register
+from dumpty_spark.session import memo
 from dumpty_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -20,36 +19,14 @@ from dumpty_spark.sources import load_table
 # sf_dir) instead of once per query — exactly what a production deployment
 # does by persisting the index sidecars. localCheckpoint (not cache) pins
 # metadata-sized state: centroids are nlist×dim, and the checkpointed
-# normalize pass is reclaimed with the session. Keyed on applicationId so
-# a new SparkSession can never see another session's checkpoint blocks.
+# normalize pass is reclaimed with the session. ``session.memo`` keys on
+# the session, so a new SparkSession never sees another session's blocks.
 # The brute-force top-5 of the standard query batch (vec_id < 10) is a
 # shared artifact too (r6, VERDICT r5 task 6): q_cosine_topk publishes
 # it, the recall audit's floor and the Matryoshka audit's reference
 # recompute it — one queries×corpus pass per (session, sf_dir) instead
 # of three.
 # ---------------------------------------------------------------------------
-# Registry queries run on concurrent driver threads (run_overlapped),
-# so lookup, eviction and insert hold _ANN_SHARED_LOCK. build() runs
-# outside it (it starts Spark jobs, and a build may itself read another
-# entry); racing cold builds keep the first insert, so every caller gets
-# one frame.
-_ANN_SHARED: dict[tuple, object] = {}
-_ANN_SHARED_LOCK = threading.Lock()
-
-
-def _shared_get(spark: SparkSession, sf_dir: str, tag: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    with _ANN_SHARED_LOCK:
-        cached = _ANN_SHARED.get(key)
-    if cached is not None:
-        return cached
-    value = build()
-    with _ANN_SHARED_LOCK:
-        # one session's entries at a time — drop stale sessions' frames
-        # so their checkpoint blocks can be reclaimed
-        for k in [k for k in _ANN_SHARED if k[0] != key[0]]:
-            del _ANN_SHARED[k]
-        return _ANN_SHARED.setdefault(key, value)
 
 
 def _shared_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,17 +34,16 @@ def _shared_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return S._normalized_corpus(emb, "vec_id", "embedding").localCheckpoint()
 
-    return _shared_get(spark, sf_dir, "cn", build)
+    return memo(spark, ("ann", sf_dir, "cn"), build)
 
 
 def _shared_ann_artifacts(
     spark: SparkSession, sf_dir: str, nlist: int = 16
 ) -> tuple[DataFrame, list]:
     cn = _shared_normalized(spark, sf_dir)
-    cents = _shared_get(
+    cents = memo(
         spark,
-        sf_dir,
-        f"cents{nlist}",
+        ("ann", sf_dir, f"cents{nlist}"),
         lambda: S._ivf_centroids(cn, nlist, S._best_cell),
     )
     return cn, cents
@@ -86,7 +62,7 @@ def _shared_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, queries, k=5, normalized=cn
         ).localCheckpoint()
 
-    return _shared_get(spark, sf_dir, "exact5", build)
+    return memo(spark, ("ann", sf_dir, "exact5"), build)
 
 
 _COSINE_ORACLE = """

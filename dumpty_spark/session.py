@@ -17,6 +17,7 @@ timestamps are UTC-naive); the reference's America/Los_Angeles pin
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -122,6 +123,55 @@ def scratch_cleanup(spark: SparkSession, path: str) -> None:
     fs = jpath.getFileSystem(hconf)
     if fs.exists(jpath):
         fs.delete(jpath, True)
+
+
+# (applicationId, namespace, ...) -> value; see memo.
+_MEMO: dict[tuple, object] = {}
+_MEMO_LOCK = threading.Lock()
+_BUILDING: dict[tuple, threading.Lock] = {}  # key -> its build's lock
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """``build()``'s value, built once per (session, ``key``) and shared
+    by every later caller. ``key`` starts with a namespace, such as
+    ``("relation", sf_dir, name)`` or ``("pairs", sf_dir)``.
+
+    Registry queries run on concurrent driver threads (run_overlapped),
+    so lookup, eviction and insert hold ``_MEMO_LOCK``. ``build()`` runs
+    outside it, because it starts Spark jobs and may read other entries,
+    but under its key's lock, so concurrent callers of one cold key wait
+    for a single build. Keyed on ``applicationId``: a new SparkSession
+    never sees another session's frames, and an insert drops stale
+    sessions' entries so their checkpoint blocks can be reclaimed. The
+    first insert wins; a None value is returned but never cached."""
+    k = (spark.sparkContext.applicationId, *key)
+    with _MEMO_LOCK:
+        hit = _MEMO.get(k)
+        if hit is not None:
+            return hit
+        gate = _BUILDING.setdefault(k, threading.Lock())
+    with gate:
+        with _MEMO_LOCK:
+            hit = _MEMO.get(k)
+        if hit is None:
+            hit = build()
+        with _MEMO_LOCK:
+            if _BUILDING.get(k) is gate:
+                del _BUILDING[k]
+            if hit is None:
+                return None
+            for stale in [s for s in _MEMO if s[0] != k[0]]:
+                del _MEMO[stale]
+            return _MEMO.setdefault(k, hit)
+
+
+def forget(*prefix) -> None:
+    """Drop every session's entries whose key starts with ``prefix``: a
+    namespace such as ``"pairs"``, optionally followed by more key parts."""
+    n = len(prefix)
+    with _MEMO_LOCK:
+        for k in [k for k in _MEMO if k[1:1 + n] == prefix]:
+            del _MEMO[k]
 
 
 def last_job_id(spark: SparkSession) -> int:

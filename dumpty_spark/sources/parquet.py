@@ -15,11 +15,12 @@ dumpty_spark.plans earns its keep).
 from __future__ import annotations
 
 import os
-import threading
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_json_string
+
+from dumpty_spark.session import memo
 
 TABLES = (
     "region",
@@ -37,13 +38,6 @@ TABLES = (
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-# (applicationId, sf_dir, table) -> analyzed DataFrame. Plan/metadata
-# memo only (file listing + schema resolution); see load_table. Driver
-# threads share it, so every lookup, eviction and insert holds the lock.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
-_RELATION_LOCK = threading.Lock()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -74,17 +68,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # every ts would shift by the zone offset relative to DuckDB's
         # naive reading — silently skewing all event-time queries.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    with _RELATION_LOCK:
-        cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = table_path(sf_dir, name)
-    schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
-    if name == "events":
-        df = _normalize_events_ts(df)
     # Memoize the ANALYZED RELATION, not results: re-resolving the same
     # fixture table costs a directory listing, a driver-side footer read
     # and an analysis per call, and the suite resolves the ten fixture
@@ -92,14 +75,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # by registering the table in a catalog; the memo is the same thing
     # per (session, sf_dir). Every action on the returned frame still
     # scans the parquet files — nothing about query execution or results
-    # is cached. Keyed on applicationId so a new SparkSession never sees
-    # another session's resolved plans; stale sessions' entries are
-    # dropped eagerly. Two threads may both build a cold table; the first
-    # insert wins and both return it.
-    with _RELATION_LOCK:
-        for k in [k for k in _RELATION_CACHE if k[0] != key[0]]:
-            del _RELATION_CACHE[k]
-        return _RELATION_CACHE.setdefault(key, df)
+    # is cached.
+    return memo(
+        spark, ("relation", sf_dir, name), lambda: _resolve(spark, sf_dir, name)
+    )
+
+
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = table_path(sf_dir, name)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    return _normalize_events_ts(df) if name == "events" else df
 
 
 def footer_schema(spark: SparkSession, path: str) -> StructType | None:

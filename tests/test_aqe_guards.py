@@ -94,11 +94,11 @@ def test_cpu_heavy_query_keeps_parallelism_floor(spark, sf_t2, name):
     # builds (shared_graph caches) for several of these queries — clear
     # them so THIS job group measures the build path, which is where the
     # parallelism pin must hold
-    import dumpty_spark.queries.shared_graph as SG
     from dumpty_spark.operators.similarity import _VEC_MIN_PARTS
+    from dumpty_spark.session import forget
 
-    SG._PAIR_CACHE.clear()
-    SG._JACCARD_CACHE.clear()
+    forget("pairs")
+    forget("jaccard")
     par = spark.sparkContext.defaultParallelism
     floor = _VEC_MIN_PARTS if GUARDED[name] == "vec" else par
     floor = min(floor, par)

@@ -17,21 +17,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from dumpty_spark.queries import shared_graph, vector  # noqa: E402
+from dumpty_spark import session  # noqa: E402
+
+NAMESPACES = ("pairs", "jaccard", "ann")
 
 
 def _cache_keys():
-    return (
-        set(shared_graph._PAIR_CACHE),
-        set(shared_graph._JACCARD_CACHE),
-        set(vector._ANN_SHARED),
-    )
+    """The session memo's keys in each shared-cache namespace."""
+    with session._MEMO_LOCK:
+        return tuple({k for k in session._MEMO if k[1] == ns} for ns in NAMESPACES)
 
 
 def test_prebuild_populates_every_gated_cache(spark, sf_smoke):
-    shared_graph._PAIR_CACHE.clear()
-    shared_graph._JACCARD_CACHE.clear()
-    vector._ANN_SHARED.clear()
+    for ns in NAMESPACES:
+        session.forget(ns)
     timings = bench.prebuild_shared_caches(spark, sf_smoke)
     assert set(timings) == {
         "shared_cache:pair_graph",
@@ -42,7 +41,7 @@ def test_prebuild_populates_every_gated_cache(spark, sf_smoke):
     pair, jac, ann = _cache_keys()
     assert pair and jac and ann
     # the ANN builder materializes all three session artifacts
-    tags = {k[2] for k in ann}
+    tags = {k[3] for k in ann}
     assert {"cn", "cents16", "exact5"} <= tags
 
 

@@ -204,3 +204,24 @@ def test_early_probe_list_covers_last_rounds_driver_flags():
         "q_source_overlap_matrix",
     ):
         assert name in _EARLY_PROBES
+
+
+def test_only_a_full_run_at_the_baseline_sf_is_gated():
+    """The committed baseline is a full-suite run at one SF: a subset
+    (SPARK_GRAFT_BENCH_ONLY) or a run at another SF would flag every
+    query against it, so neither is gated, probed early, or written over
+    the committed BENCH_SUMMARY/BENCH_DETAIL."""
+    import json
+    from pathlib import Path
+
+    from bench import baseline_gated
+
+    doc = json.loads(
+        (Path(__file__).resolve().parent.parent / "bench_baseline.json").read_text()
+    )
+    assert doc["sf"] == 0.1
+    assert baseline_gated(0.1, None, doc)  # the default sf0.1 full run
+    assert not baseline_gated(1.0, None, doc)
+    assert not baseline_gated(0.01, None, doc)
+    assert not baseline_gated(0.1, {"q01_pricing_summary"}, doc)
+    assert not baseline_gated(0.1, None, None)  # no baseline to gate against

@@ -46,7 +46,17 @@ def _ev(spark, rows):
 # ---------------------------------------------------------------------------
 # E121 label propagation
 # ---------------------------------------------------------------------------
-def test_lpa_separates_two_cliques(spark, monkeypatch):
+@pytest.fixture
+def fake_pairs_key():
+    """Isolate the fake-data pair graph (sf_dir "x") from other tests."""
+    from dumpty_spark.session import forget
+
+    forget("pairs", "x")
+    yield
+    forget("pairs", "x")
+
+
+def test_lpa_separates_two_cliques(spark, monkeypatch, fake_pairs_key):
     """Two 4-cliques joined by one bridge edge resolve to two
     communities, each labeled by its smallest member."""
     import dumpty_spark.queries.frontier4 as FR4
@@ -59,7 +69,6 @@ def test_lpa_separates_two_cliques(spark, monkeypatch):
         rows += [(order, p) for p in parts]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
     monkeypatch.setattr(SG, "load_table", lambda *a: li)
-    monkeypatch.setattr(SG, "_PAIR_CACHE", {})  # isolate from real data
     out = {r["community"]: r for r in FR4.q_label_propagation(spark, "x").collect()}
     # every node converges into one of the two clique communities
     total = sum(r["n_members"] for r in out.values())
@@ -69,14 +78,13 @@ def test_lpa_separates_two_cliques(spark, monkeypatch):
     assert sizes == [4, 4]
 
 
-def test_lpa_is_deterministic(spark, monkeypatch):
+def test_lpa_is_deterministic(spark, monkeypatch, fake_pairs_key):
     import dumpty_spark.queries.frontier4 as FR4
     import dumpty_spark.queries.shared_graph as SG
 
     rows = [(1, p) for p in (1, 2, 3)] + [(2, p) for p in (3, 4, 5)]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
     monkeypatch.setattr(SG, "load_table", lambda *a: li)
-    monkeypatch.setattr(SG, "_PAIR_CACHE", {})
     a = [tuple(r) for r in FR4.q_label_propagation(spark, "x").collect()]
     b = [tuple(r) for r in FR4.q_label_propagation(spark, "x").collect()]
     assert a == b

@@ -128,16 +128,17 @@ def test_adamic_adar_fixture(spark, monkeypatch):
     neighbor is (1,3) through center 2 (degree 2) — score 1/ln 2."""
     import dumpty_spark.queries.frontier8 as f8
     from dumpty_spark.queries import shared_graph
+    from dumpty_spark.session import forget
 
     li = spark.createDataFrame(
         [(10, 1), (10, 2), (20, 2), (20, 3)], ["l_orderkey", "l_partkey"]
     )
     monkeypatch.setattr(shared_graph, "load_table", _fake_loader({"lineitem": li}))
-    shared_graph._PAIR_CACHE.clear()
+    forget("pairs", "fixture")
     try:
         rows = f8.q_adamic_adar(spark, "fixture").collect()
     finally:
-        shared_graph._PAIR_CACHE.clear()
+        forget("pairs", "fixture")
     assert len(rows) == 1
     r = rows[0]
     assert (r["u"], r["v"], r["n_common"]) == (1, 3, 1)
@@ -149,6 +150,7 @@ def test_adamic_adar_hub_capped(spark, monkeypatch):
     only the hub produce NO predicted links (the df-cap discipline)."""
     import dumpty_spark.queries.frontier8 as f8
     from dumpty_spark.queries import shared_graph
+    from dumpty_spark.session import forget
 
     rows = [(100 + i, 9999) for i in range(70)] + [
         (100 + i, 100 + i) for i in range(70)
@@ -157,11 +159,11 @@ def test_adamic_adar_hub_capped(spark, monkeypatch):
         [(o, p) for o, p in rows], ["l_orderkey", "l_partkey"]
     )
     monkeypatch.setattr(shared_graph, "load_table", _fake_loader({"lineitem": li}))
-    shared_graph._PAIR_CACHE.clear()
+    forget("pairs", "fixture")
     try:
         got = f8.q_adamic_adar(spark, "fixture").collect()
     finally:
-        shared_graph._PAIR_CACHE.clear()
+        forget("pairs", "fixture")
     assert got == []
 
 

@@ -254,17 +254,18 @@ def test_degree_tail_fixture(spark, monkeypatch):
     above d_(k)=1."""
     import dumpty_spark.queries.frontier9 as f9
     from dumpty_spark.queries import shared_graph
+    from dumpty_spark.session import forget
 
     li = spark.createDataFrame(
         [(i, 0) for i in range(9)] + [(i, i + 1) for i in range(9)],
         ["l_orderkey", "l_partkey"],
     )
     monkeypatch.setattr(shared_graph, "load_table", _fake_loader({"lineitem": li}))
-    shared_graph._PAIR_CACHE.clear()
+    forget("pairs", "fixture")
     try:
         row = f9.q_degree_tail(spark, "fixture").first()
     finally:
-        shared_graph._PAIR_CACHE.clear()
+        forget("pairs", "fixture")
     assert row["n_nodes"] == 10 and row["max_d"] == 9
     assert row["mean_degree"] == pytest.approx(1.8)
     assert (row["p50"], row["p90"], row["p99"]) == (1, 1, 9)

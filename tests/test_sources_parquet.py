@@ -1,10 +1,10 @@
-"""Parquet source: the footer-read schema equals Spark's inferred one, a
-cold load starts no Spark job, and the relation memo is thread-safe."""
+"""Parquet source: the footer-read schema equals Spark's inferred one, and
+a cold load starts no Spark job. The relation memo's thread safety is
+tested with the other session-memo caches in test_session_memo.py."""
 
 from __future__ import annotations
 
 import os
-import threading
 from decimal import Decimal
 
 import pyarrow as pa
@@ -103,36 +103,3 @@ def test_cold_load_table_starts_no_job(spark, sf_smoke, tmp_path):
     for n, df in frames.items():
         assert df.schema == P.load_table(spark, sf_smoke, n).schema, n
     assert frames["events"].schema["ts"].dataType.simpleString() == "timestamp_ntz"
-
-
-def test_relation_cache_is_thread_safe(spark, sf_smoke, tmp_path):
-    """Eight threads load the same cold tables at once while the memo holds
-    many stale-session entries: no thread fails in the eviction, the stale
-    entries are gone, and every thread gets the one memoized frame."""
-    names = ("region", "nation", "supplier", "part")
-    sf = _fixture_copy(sf_smoke, tmp_path / "shared", names)
-    with P._RELATION_LOCK:
-        for i in range(50_000):
-            P._RELATION_CACHE[(f"stale-app-{i}", sf, "region")] = None
-    barrier = threading.Barrier(8)
-    got: list[dict] = []
-    errors: list[BaseException] = []
-
-    def worker(k: int) -> None:
-        try:
-            barrier.wait()
-            order = names[k % 4:] + names[:k % 4]
-            got.append({n: P.load_table(spark, sf, n) for n in order})
-        except BaseException as e:  # noqa: BLE001 - reported below
-            errors.append(e)
-
-    threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert errors == []
-    app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in P._RELATION_CACHE)
-    for n in names:
-        assert len({id(g[n]) for g in got}) == 1, n
