@@ -30,7 +30,7 @@ import sys
 import time
 
 from dumpty_spark.queries import REGISTRY
-from dumpty_spark.session import forget, get_session
+from dumpty_spark.session import codegen_compiles, forget, get_session
 
 # ---------------------------------------------------------------------------
 # Early-session probes (VERDICT r9, next-round #1): any query the DRIVER's
@@ -203,10 +203,30 @@ def window_inflated(
     i = names.index(name)
     neighborhood = names[max(0, i - 1): i + 2]
     for n in neighborhood:
-        load1, gc_ms = telemetry[n]
+        load1, gc_ms = telemetry[n][:2]
         if load1 > 1.25 * med_load + 0.5 or gc_ms > max(4 * med_gc, 500.0):
             return True
     return False
+
+
+def window_summary(telemetry: dict[str, list[float]], flagged: set[str]) -> dict:
+    """Run-level window quality (VERDICT r10 #7): median/p90 load, total
+    GC and total codegen compiles expose how clean this session's
+    machine window was, and each flag's suite position shows WHERE in
+    the session it spiked — readable from the summary without opening
+    BASELINE.md."""
+    loads = sorted(v[0] for v in telemetry.values())
+    suite_order = sorted(telemetry)
+    return {
+        "median_load1": loads[len(loads) // 2] if loads else None,
+        "p90_load1": loads[int(len(loads) * 0.9)] if loads else None,
+        "total_gc_ms": round(sum(v[1] for v in telemetry.values()), 1),
+        "total_compiles": sum(v[2] for v in telemetry.values()),
+        "flag_suite_position": {
+            n: suite_order.index(n) for n in sorted(flagged) if n in telemetry
+        },
+        "suite_len": len(suite_order),
+    }
 
 
 def adjudicate_flags(
@@ -347,10 +367,12 @@ def main() -> int:
             continue
         load1 = os.getloadavg()[0]
         g0 = _gc_ms(spark)
+        c0 = codegen_compiles(spark)[0]
         t0 = time.perf_counter()
         spec.fn(spark, sf_dir).collect()
         elapsed = time.perf_counter() - t0
         gc_d = _gc_ms(spark) - g0
+        cg_d = codegen_compiles(spark)[0] - c0
         # caches are per-operator working sets; dropping them between
         # queries keeps measurements independent of suite order, and the
         # driver-side GC lets the ContextCleaner actually reclaim the
@@ -365,19 +387,23 @@ def main() -> int:
             # number tracks the query, not the JVM's mood
             load1b = os.getloadavg()[0]
             g0 = _gc_ms(spark)
+            c0 = codegen_compiles(spark)[0]
             t1 = time.perf_counter()
             spec.fn(spark, sf_dir).collect()
             e2 = time.perf_counter() - t1
             if e2 < elapsed:
                 elapsed, load1, gc_d = e2, load1b, _gc_ms(spark) - g0
+                cg_d = codegen_compiles(spark)[0] - c0
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
         timings[name] = round(elapsed, 4)
-        # [1-min load average at start, JVM GC ms during the kept run] —
-        # lets a reader separate machine-wide inflation (high load/GC
-        # across NEIGHBORS too) from a query-specific change (VERDICT r9
-        # next-round #1: adjudication by data, not narrative)
-        telemetry[name] = [round(load1, 2), round(gc_d, 1)]
+        # [1-min load average at start, JVM GC ms during the kept run,
+        # generated classes it compiled] — lets a reader separate
+        # machine-wide inflation (high load/GC across NEIGHBORS too) from
+        # a query-specific change (VERDICT r9 next-round #1: adjudication
+        # by data, not narrative), and shows a run that paid for codegen
+        # its warm baseline did not
+        telemetry[name] = [round(load1, 2), round(gc_d, 1), cg_d]
 
     out = {
         "metric": "total_query_wall_sec",
@@ -441,24 +467,9 @@ def main() -> int:
     out["regressions"] = regressions
 
     worst = sorted(timings.items(), key=lambda kv: -kv[1])[:5]
-    # run-level window quality (VERDICT r10 #7): median/p90 load and
-    # total GC expose how clean this session's machine window was, and
-    # each flag's suite position shows WHERE in the session it spiked —
-    # readable from the summary without opening BASELINE.md
-    loads = sorted(v[0] for v in telemetry.values())
-    gcs = [v[1] for v in telemetry.values()]
-    suite_order = sorted(telemetry)
-    flags_all = set(regressions) | set(detail.get("cleared_flags", {}))
-    window = {
-        "median_load1": loads[len(loads) // 2] if loads else None,
-        "p90_load1": loads[int(len(loads) * 0.9)] if loads else None,
-        "total_gc_ms": round(sum(gcs), 1),
-        "flag_suite_position": {
-            n: suite_order.index(n) for n in sorted(flags_all)
-            if n in telemetry
-        },
-        "suite_len": len(suite_order),
-    }
+    window = window_summary(
+        telemetry, set(regressions) | set(detail.get("cleared_flags", {}))
+    )
     detail["window"] = window
     # ungated runs (a subset, another SF) must not clobber the
     # committed full-suite side artifacts

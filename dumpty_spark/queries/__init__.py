@@ -42,6 +42,18 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` as a frame built on the driver. Through pandas and Arrow
+    with an explicit schema it plans as a ``LocalRelation``, where
+    ``createDataFrame(<list>)`` parallelizes the list and starts a
+    Python-worker task per slice even for a one-row answer."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=struct.names), struct)
+
+
 def queries() -> dict[str, QueryFn]:
     return {k: v.fn for k, v in sorted(REGISTRY.items())}
 

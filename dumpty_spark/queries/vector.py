@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from dumpty_spark.operators import multimodal as M
 from dumpty_spark.operators import similarity as S
-from dumpty_spark.queries import register
+from dumpty_spark.queries import local_frame, register
 from dumpty_spark.session import memo
 from dumpty_spark.sources import load_table
 
@@ -385,10 +385,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = S.ann_ivf_topk(
         emb, queries, k=5, nlist=16, nprobe=4, normalized=cn, centroids=cents
     ).collect()
-    return spark.createDataFrame(
-        _ann_audit_surface(
-            topk, _shared_exact_topk(spark, sf_dir), "ivf", 0.4
-        ),
+    return local_frame(
+        spark,
+        _ann_audit_surface(topk, _shared_exact_topk(spark, sf_dir), "ivf", 0.4),
         _ANN_AUDIT_SCHEMA,
     )
 
@@ -436,10 +435,9 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        _ann_audit_surface(
-            topk, _shared_exact_topk(spark, sf_dir), "ivf_pq", 0.7
-        ),
+    return local_frame(
+        spark,
+        _ann_audit_surface(topk, _shared_exact_topk(spark, sf_dir), "ivf_pq", 0.7),
         _ANN_AUDIT_SCHEMA,
     )
 

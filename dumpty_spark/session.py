@@ -44,6 +44,16 @@ DEFAULT_CONFS: dict[str, str] = {
     # nanos to micros, so both engines see identical values
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
+    # Generated-code cache (static: only the session builder can set it).
+    # Spark's default holds 100 classes. One seed-shuffled query_mix pass
+    # needs about 200, so at 100 every warm pass recompiled 118-163 of
+    # them (0.7-1.2 s of Janino compile at sf0.01 on 4 vCPU, plus the
+    # JIT warm-up the fresh classes lose); at 2000 it compiles none. One
+    # pass over all 355 registry queries at sf0.01 needs more: 5,485
+    # distinct classes, so a session that wide still recompiles some.
+    # After that pass (3 GB heap) the JVM held Metaspace 206 MB and RSS
+    # 3.8 GB at 100 (8,746 compiles), 221 MB and 4.0 GB at 2000 (5,882).
+    "spark.sql.codegen.cache.maxEntries": "2000",
     # Python-worker daemon (dumpty_spark/python_daemon.py) that makes a
     # worker task pay only for its own work: numpy/pandas/pyarrow are
     # PRELOADED before fork (fresh workers inherit them copy-on-write
@@ -125,8 +135,15 @@ def scratch_cleanup(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
-# (applicationId, namespace, ...) -> value; see memo.
+# (applicationId, namespace, ...) -> value, least recently used first;
+# see memo.
 _MEMO: dict[tuple, object] = {}
+# "relation" entries kept per session. Every new sf_dir passed to
+# load_table adds entries (a fleet ingestion resolves each pass from a
+# fresh directory), so past this many the least recently used go; a
+# dropped relation costs one footer read to load again. No other
+# namespace is bounded.
+_RELATION_CAP = 64
 _MEMO_LOCK = threading.Lock()
 _BUILDING: dict[tuple, threading.Lock] = {}  # key -> its build's lock
 
@@ -142,12 +159,15 @@ def memo(spark: SparkSession, key: tuple, build):
     but under its key's lock, so concurrent callers of one cold key wait
     for a single build. Keyed on ``applicationId``: a new SparkSession
     never sees another session's frames, and an insert drops stale
-    sessions' entries so their checkpoint blocks can be reclaimed. The
-    first insert wins; a None value is returned but never cached."""
+    sessions' entries so their checkpoint blocks can be reclaimed.
+    ``relation`` entries past ``_RELATION_CAP`` are dropped least
+    recently used first. The first insert wins; a None value is returned
+    but never cached."""
     k = (spark.sparkContext.applicationId, *key)
     with _MEMO_LOCK:
-        hit = _MEMO.get(k)
+        hit = _MEMO.pop(k, None)
         if hit is not None:
+            _MEMO[k] = hit  # re-inserted: now the most recently used
             return hit
         gate = _BUILDING.setdefault(k, threading.Lock())
     with gate:
@@ -162,7 +182,12 @@ def memo(spark: SparkSession, key: tuple, build):
                 return None
             for stale in [s for s in _MEMO if s[0] != k[0]]:
                 del _MEMO[stale]
-            return _MEMO.setdefault(k, hit)
+            hit = _MEMO.setdefault(k, hit)
+            if k[1] == "relation":
+                rel = [s for s in _MEMO if s[1] == "relation"]
+                for old in rel[:max(0, len(rel) - _RELATION_CAP)]:
+                    del _MEMO[old]
+            return hit
 
 
 def forget(*prefix) -> None:
@@ -181,6 +206,17 @@ def last_job_id(spark: SparkSession) -> int:
     with the UI off."""
     jobs = _status_store(spark).jobsList(None)  # newest first
     return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Generated classes compiled in this JVM so far and their total
+    compile time in ms. A compile happens only on a codegen-cache miss,
+    so the difference of two reads is what a stretch of work compiled.
+    Read from ``CodegenMetrics`` and ``CodeGenerator``, with the UI off."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return hist.getCount(), nanos / 1e6
 
 
 def jobs_after(spark: SparkSession, job_id: int) -> list[dict]:

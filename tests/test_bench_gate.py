@@ -75,19 +75,20 @@ def test_adjudicate_same_double_gate_as_find_regressions():
     assert not standing and "q" in cleared
 
 
-# telemetry frame: q_ppr's own suite window shows elevated load vs the
-# session median (ambient inflation corroborated by data)
+# telemetry frame [load1, gc_ms, compiles]: q_ppr's own suite window
+# shows elevated load vs the session median (ambient inflation
+# corroborated by data)
 _INFLATED_TELEMETRY = {
-    "q_aaa": [3.0, 50.0],
-    "q_bbb": [3.1, 40.0],
-    "q_ppr": [9.5, 2000.0],  # elevated load1 AND gc in its window
-    "q_zzz": [3.0, 45.0],
+    "q_aaa": [3.0, 50.0, 0],
+    "q_bbb": [3.1, 40.0, 2],
+    "q_ppr": [9.5, 2000.0, 0],  # elevated load1 AND gc in its window
+    "q_zzz": [3.0, 45.0, 0],
 }
 _CLEAN_TELEMETRY = {
-    "q_aaa": [3.0, 50.0],
-    "q_bbb": [3.1, 40.0],
-    "q_ppr": [3.0, 45.0],  # nothing elevated — no inflation story
-    "q_zzz": [3.0, 45.0],
+    "q_aaa": [3.0, 50.0, 0],
+    "q_bbb": [3.1, 40.0, 2],
+    "q_ppr": [3.0, 45.0, 0],  # nothing elevated — no inflation story
+    "q_zzz": [3.0, 45.0, 0],
 }
 
 
@@ -170,10 +171,35 @@ def test_window_inflated_uses_neighbors():
     from bench import window_inflated
 
     tele = dict(_CLEAN_TELEMETRY)
-    tele["q_bbb"] = [11.0, 40.0]  # neighbor of q_ppr? no — of q_aaa
+    tele["q_bbb"] = [11.0, 40.0, 0]  # neighbor of q_ppr? no — of q_aaa
     # q_bbb is adjacent to q_aaa and q_ppr in sorted order
     assert window_inflated("q_ppr", tele) is True
     assert window_inflated("q_zzz", tele) is False
+
+
+def test_compiles_are_not_window_inflation():
+    """The third telemetry field (codegen compiles) is reported, not
+    read as machine state: a window that compiled a lot but shows no
+    elevated load or GC is not inflated."""
+    from bench import window_inflated
+
+    tele = {n: [v[0], v[1], 500] for n, v in _CLEAN_TELEMETRY.items()}
+    assert window_inflated("q_ppr", tele) is False
+    tele["q_ppr"] = [9.5, 45.0, 0]
+    assert window_inflated("q_ppr", tele) is True
+
+
+def test_window_summary_totals_gc_and_compiles():
+    from bench import window_summary
+
+    w = window_summary(_INFLATED_TELEMETRY, {"q_ppr", "q_gone"})
+    assert w["total_gc_ms"] == 2135.0
+    assert w["total_compiles"] == 2
+    assert w["median_load1"] == 3.1
+    assert w["flag_suite_position"] == {"q_ppr": 2}
+    assert w["suite_len"] == 4
+    empty = window_summary({}, set())
+    assert empty["median_load1"] is None and empty["total_compiles"] == 0
 
 
 def test_adjudicate_early_probe_cannot_save_a_real_regression():

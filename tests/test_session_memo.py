@@ -140,3 +140,59 @@ def test_none_is_never_cached(spark):
         assert session.memo(spark, key, lambda: None) is frame
     finally:
         session.forget(*key)
+
+
+def test_relation_entries_are_bounded_lru(spark, sf_smoke, tmp_path, monkeypatch):
+    """A session that loads tables from ever new directories (a fleet
+    ingestion resolves each pass from a fresh one) keeps at most
+    ``_RELATION_CAP`` relations, dropping the least recently used; hits,
+    one build per cold key and other namespaces' entries survive the
+    churn."""
+    app = spark.sparkContext.applicationId
+    cap = session._RELATION_CAP
+    builds: list = []
+    footer_schema = P.footer_schema
+
+    def counted(spark, path):
+        builds.append(path)
+        return footer_schema(spark, path)
+
+    monkeypatch.setattr(P, "footer_schema", counted)
+
+    def relations():
+        with session._MEMO_LOCK:
+            return [k for k in session._MEMO if k[0] == app and k[1] == "relation"]
+
+    ann_key = ("ann", RACE_SF, "test-lru")
+    ann = session.memo(spark, ann_key, lambda: spark.range(1))
+    dirs = []
+    try:
+        hot = P.load_table(spark, sf_smoke, "region")
+        for i in range(cap // 2 + 3):  # more fresh directories than the cap holds
+            d = str(tmp_path / f"fresh{i}")
+            os.makedirs(d)
+            for n in ("region", "nation"):
+                os.link(P.table_path(sf_smoke, n), P.table_path(d, n))
+            dirs.append(d)
+            n0 = len(builds)
+            first = {n: P.load_table(spark, d, n) for n in ("region", "nation")}
+            assert len(builds) == n0 + 2  # one build per cold key
+            again = {n: P.load_table(spark, d, n) for n in ("region", "nation")}
+            assert {n: id(f) for n, f in again.items()} == {
+                n: id(f) for n, f in first.items()
+            }
+            assert len(builds) == n0 + 2  # hits build nothing
+            # a hot key stays: each hit makes it the most recently used
+            assert P.load_table(spark, sf_smoke, "region") is hot
+            assert len(relations()) <= cap
+        assert len(relations()) == cap
+        # the oldest directories went first and build again on demand
+        assert ("relation", dirs[0], "region") not in {k[1:] for k in relations()}
+        n0 = len(builds)
+        P.load_table(spark, dirs[0], "region")
+        assert len(builds) == n0 + 1
+        assert session.memo(spark, ann_key, lambda: None) is ann
+    finally:
+        session.forget(*ann_key)
+        for d in dirs:
+            session.forget("relation", d)
