@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from dumpty_spark.operators.dedup import connected_components
 from dumpty_spark.sinks import manifest as M
+from dumpty_spark.sinks.writers import upsert_keys
 
 
 def component_store_update(
@@ -109,7 +110,7 @@ def component_store_update(
     updates = changed_old.unionByName(new_nodes).localCheckpoint()
     n_upserted = updates.count()
     if n_upserted:
-        stats = M.upsert_keys_versioned(spark, root, "id", updates)
+        stats = upsert_keys(spark, root, "id", updates)
     else:
         stats = {"version": M.current_version(root)}
     return {

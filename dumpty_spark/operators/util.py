@@ -28,17 +28,12 @@ def run_overlapped(
     properties are already common, so the thunks run unwrapped (matching
     upstream's own dispatch in ``inheritable_thread_target``).
     """
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
     fns = list(fns)
     if not fns:
         return []
-    # one switch to run every overlapped region sequentially — the A/B
-    # knob for adjudicating whether driver-thread overlap pays on a
-    # given host (VERDICT r11 #3), and an escape hatch for deployments
-    # that want strictly serial actions
-    if len(fns) == 1 or os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
+    if len(fns) == 1:
         return [f() for f in fns]
     try:
         from py4j.clientserver import ClientServer

@@ -119,7 +119,7 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         # counts on driver threads (the q_ann_recall_check discipline);
         # per-probe computation and results are unchanged. run_overlapped
         # propagates job-group/local properties into the pool threads
-        # (ADVICE r11 #4) and honors SPARK_GRAFT_NO_OVERLAP.
+        # (ADVICE r11 #4).
         from dumpty_spark.operators.util import run_overlapped
 
         specs = [

@@ -80,9 +80,7 @@ DEFAULT_CONFS: dict[str, str] = {
     # (long the default on EMR). Trade-off: a failed task's partial
     # files are cleaned by attempt-id naming rather than directory
     # atomicity; Spark's own retry semantics already assume this.
-    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": os.environ.get(
-        "SPARK_GRAFT_COMMITTER_ALGO", "2"
-    ),
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     # bucketed-table metastore location (write_bucketed/bucketed tables);
     # keep it out of the source tree — on a cluster this is the real
     # warehouse path

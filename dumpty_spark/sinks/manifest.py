@@ -1,6 +1,7 @@
 """Manifest-commit protocol for the at-rest mutators (VERDICT r2 task 2).
 
-The round-2 mutators (``delete_keys``/``upsert_keys``/``compact_parquet``)
+On a plain parquet directory the mutators (``delete_keys``/
+``upsert_keys``/``merge_keys``/``compact_parquet`` in sinks/writers.py)
 swap files in place — atomic per file via ``os.replace``, but a crash
 between two file swaps leaves a HALF-MUTATED dataset visible to readers.
 This module is the fix: the snapshot-isolation commit protocol that
@@ -36,6 +37,11 @@ Protocol invariants:
 
 Time travel falls out for free: ``read_store(..., version=N)`` reads any
 retained snapshot.
+
+The keyed mutators have no code of their own here: ``sinks.writers``
+runs one path for both store kinds and forks only at the publish, where
+a versioned store stages files (``_stage_dataframe``) and commits them
+(``commit_mutation``) under ``_commit_lock``.
 """
 
 from __future__ import annotations
@@ -227,7 +233,8 @@ def commit_mutation(
     _locked: bool = False,
 ) -> dict:
     """Partial commit: next snapshot = kept basenames + staged basenames.
-    Used by keyed delete/upsert, which rewrite only hit files.
+    Used by the keyed mutators (sinks/writers.py), which rewrite only
+    hit files.
 
     ``_locked``: the keyed mutators hold the commit lock across their
     WHOLE read→stage→publish (a mutation's keep list is only valid
@@ -308,200 +315,12 @@ def vacuum(root: str, keep_versions: int = 1) -> dict:
     }
 
 
-# ---------------------------------------------------------------------------
-# The at-rest mutators, re-expressed on the commit protocol. Same
-# hit-file targeting as the plain-path versions in sinks/writers.py
-# (only files containing an affected key are rewritten — at 100 TB a
-# keyed trickle must not rewrite the corpus), but the publish is one
-# atomic pointer swap instead of N in-place file replaces.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def _hit_basenames(
-    spark: SparkSession, root: str, key_col: str, keys=None, keys_df=None
-) -> list[str]:
-    """Basenames of current-snapshot files containing ≥1 matching key,
-    via input_file_name over the snapshot read. Two-regime targeting
-    (sinks/writers.py discipline): an In-literal below _ISIN_MAX keys
-    (footer min-max / dictionary pruning applies before any row is
-    materialized), a broadcast semi join above (expression-size safe;
-    the keys are never expanded into a Python In-literal in that
-    regime, though the broadcast table itself still passes through the
-    driver — bounded by broadcast size, not expression size)."""
-    from dumpty_spark.sinks.writers import _hit_semi
-
-    rows = (
-        _hit_semi(read_store(spark, root), key_col, keys, keys_df)
-        .select(F.input_file_name().alias("_f"))
-        .distinct()
-        .collect()
-    )
-    return [os.path.basename(r["_f"].removeprefix("file://")) for r in rows]
-
-
-def delete_keys_versioned(
-    spark: SparkSession, root: str, key_col: str, keys: list
-) -> dict:
-    """Keyed delete with snapshot isolation: survivors of each hit file
-    are staged as new files; untouched files carry over by reference.
-
-    Holds the commit lock for the WHOLE read→stage→publish: the keep
-    list is only valid against the snapshot it was computed from, so a
-    concurrent commit in the middle would be silently overwritten (write
-    skew) — the second writer must fail with ConcurrentWriteError
-    instead. Key targeting is two-regime like the plain path; NULL keys
-    never match (a null-keyed store row always survives)."""
-    from dumpty_spark.sinks.writers import _hit_anti, _hit_semi
-
-    with _commit_lock(root):
-        m = read_manifest(root)
-        hit_names = set(_hit_basenames(spark, root, key_col, keys))
-        if not hit_names:
-            return {
-                "version": m["version"],
-                "files_scanned": len(m["files"]),
-                "files_rewritten": 0,
-                "files_removed": 0,
-                "rows_deleted": 0,
-            }
-        v_next = m["version"] + 1
-        hit_paths = [os.path.join(root, _DATA_DIR, n) for n in hit_names]
-        hit_df = spark.read.parquet(*hit_paths)
-        rows_deleted = _hit_semi(hit_df, key_col, keys).count()
-        survivors = _hit_anti(hit_df, key_col, keys)
-        staged = (
-            _stage_dataframe(survivors, root, v_next, "del", len(hit_names))
-            if not survivors.isEmpty()
-            else []
-        )
-        keep = [f for f in m["files"] if f not in hit_names]
-        out = commit_mutation(
-            root, keep, staged, m.get("schema_sample"), _locked=True
-        )
-    out.update(
-        {
-            # keep the plain-path delete_keys return contract: scanned =
-            # current snapshot's files; "removed" = hit files superseded
-            # with no survivors staged (versioned stores never physically
-            # delete — vacuum does)
-            "files_scanned": len(m["files"]),
-            "files_rewritten": len(hit_names),
-            "files_removed": 0 if staged else len(hit_names),
-            "rows_deleted": rows_deleted,
-        }
-    )
-    return out
-
-
-def upsert_keys_versioned(
-    spark: SparkSession, root: str, key_col: str, updates: DataFrame
-) -> dict:
-    """Keyed MERGE with snapshot isolation: hit files are re-staged with
-    updated rows merged in; never-seen keys land in one appended file.
-    Commit lock held across read→stage→publish — same write-skew
-    argument as delete_keys_versioned. Key targeting is two-regime
-    (sinks/writers.py discipline): below _ISIN_MAX distinct keys an
-    In-literal (parquet pruning), above it broadcast joins — the keys
-    are never collected as a Python list / In-literal, though the
-    broadcast itself still materializes the key frame through the
-    driver, so the large regime is bounded by broadcast size (~key
-    count × key width), not by expression size. The CC store
-    (operators/components.py) pushes large changed-node batches
-    through this path; a batch beyond broadcast scale would need a
-    shuffle join variant (not yet needed at any measured scale)."""
-    from dumpty_spark.sinks.writers import _ISIN_MAX
-
-    updates = updates.localCheckpoint()  # evaluated repeatedly below
-    # regime gate in ONE action (r11 optimization, guide §2.4): a
-    # limit-probe collect replaces the count-then-collect pair; overflow
-    # past _ISIN_MAX rows means the large regime (keys never collected).
-    kdist = updates.select(key_col).distinct()
-    probe_rows = kdist.limit(_ISIN_MAX + 1).collect()
-    if len(probe_rows) <= _ISIN_MAX:
-        keys, keys_df = [r[0] for r in probe_rows], None
-    else:
-        keys, keys_df = None, kdist
-    with _commit_lock(root):
-        return _upsert_locked(spark, root, key_col, updates, keys, keys_df)
-
-
-def _upsert_locked(
-    spark: SparkSession,
-    root: str,
-    key_col: str,
-    updates: DataFrame,
-    keys,
-    keys_df,
-) -> dict:
-    from dumpty_spark.sinks.writers import _hit_anti, _hit_semi
-
-    m = read_manifest(root)
-    # conform to the store schema — order AND types: a staged file whose
-    # physical type differs (e.g. INT literal vs the store's INT64)
-    # poisons every later snapshot read
-    store_schema = read_store(spark, root).schema
-    upd = updates.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in store_schema.fields]
-    )
-
-    hit_names = set(_hit_basenames(spark, root, key_col, keys, keys_df))
-    v_next = m["version"] + 1
-    staged: list[str] = []
-    rows_updated = 0
-    matched = None
-    if hit_names:
-        hit_paths = [os.path.join(root, _DATA_DIR, n) for n in hit_names]
-        old = spark.read.parquet(*hit_paths)
-        # update keys present in the store: change-batch-sized, stays
-        # distributed (AQE broadcasts it when small). ONE pass over the
-        # hit files yields both the matched-key frame and the updated-row
-        # count (r11 optimization, guide §2.4 — was two full hit-file
-        # scans: a distinct-keys checkpoint plus a separate semi count).
-        per_key = (
-            _hit_semi(old.select(key_col), key_col, keys, keys_df)
-            .groupBy(key_col)
-            .agg(F.count("*").alias("_n"))
-            .localCheckpoint()
-        )
-        matched = per_key.select(key_col)
-        rows_updated = int(
-            per_key.agg(F.coalesce(F.sum("_n"), F.lit(0))).first()[0]
-        )
-        # NULL-safe: a null-keyed store row never matches and survives
-        merged = _hit_anti(old, key_col, keys, keys_df).unionByName(
-            upd.join(matched, key_col, "left_semi")
-        )
-        staged += _stage_dataframe(merged, root, v_next, "ups", len(hit_names))
-    # NULL-safe: a null-keyed update row can never match a hit file by
-    # key, and the anti join keeps it — an insert by definition.
-    inserts = (
-        upd.join(matched, key_col, "left_anti") if matched is not None else upd
-    )
-    n_inserts = inserts.count()
-    if n_inserts:
-        staged += _stage_dataframe(inserts, root, v_next, "ins", 1)
-    keep = [f for f in m["files"] if f not in hit_names]
-    out = commit_mutation(
-        root, keep, staged, m.get("schema_sample"), _locked=True
-    )
-    out.update(
-        {
-            "files_rewritten": len(hit_names),
-            "rows_updated": rows_updated,
-            "rows_inserted": n_inserts,
-        }
-    )
-    return out
-
-
 def compact_versioned(
     spark: SparkSession, root: str, target_bytes: int = 50 * 1024 * 1024
 ) -> dict:
     """Small-files compaction as a full-replacement snapshot commit —
     readers of the old snapshot are never exposed to the rewrite (the
-    round-2 plain-path compactor had a brief readers-see-nothing window
+    plain-directory compactor has a brief readers-see-nothing window
     between its two renames; here there is none)."""
     from dumpty_spark.sinks.writers import advise_partitions
 

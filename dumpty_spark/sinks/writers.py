@@ -16,6 +16,7 @@ store).
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dumpty_spark.plans.types import spark_schema_to_bq
+from dumpty_spark.sinks import manifest
 
 TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss"  # reference config.py:20
 TARGET_PARTITION_BYTES = 50 * 1024 * 1024  # reference config.py:53
@@ -206,11 +208,9 @@ def compact_parquet(
     import os
     import shutil
 
-    from dumpty_spark.sinks import manifest as _m
-
-    if _m.is_versioned(path.rstrip("/")):
+    if manifest.is_versioned(path.rstrip("/")):
         # versioned store → snapshot-isolated commit path (sinks/manifest.py)
-        out = _m.compact_versioned(spark, path.rstrip("/"), target_bytes)
+        out = manifest.compact_versioned(spark, path.rstrip("/"), target_bytes)
         return out["files_before"], out["files_after"]
 
     def leaf_dirs(root: str) -> list[str]:
@@ -263,22 +263,34 @@ def compact_parquet(
 
 
 # --------------------------------------------------------------------------
-# At-rest mutation family (delete_keys / upsert_keys / merge_keys) shared
-# machinery. Two design rules, both for the 100 TB CDC case:
+# At-rest keyed mutation. delete_keys, upsert_keys and merge_keys each
+# state their change set and run the ONE path below (_probe + _mutate),
+# on a plain parquet directory and a versioned store alike:
 #
-# 1. TWO-REGIME KEY TARGETING: below _ISIN_MAX keys an ``isin`` literal is
-#    used (it reaches the parquet scan as an In filter — row-group min/max
-#    and dictionary pruning find the hit files with a metadata pass); above
-#    it, a broadcast semi/anti join against a distinct-keys frame (a giant
-#    In-literal is an expression-size risk and the keys may not even be
-#    driver-collected in that regime). Same discipline as the graph
-#    family's two-regime gates.
-# 2. ONE DISTRIBUTED REWRITE JOB: all hit files are read as ONE DataFrame
-#    tagged with input_file_name(); survivors + routed updates are written
-#    in ONE job to a shadow dir partitioned by file id (repartition by
-#    _fid → exactly one part per hit file), then the driver performs the
-#    atomic per-file os.replace swaps. A CDC batch hitting thousands of
-#    files costs one Spark job, not thousands of driver-dispatched ones.
+# 1. PROBE: one limit-probe collect picks the key regime. Below _ISIN_MAX
+#    keys the change keys are an ``isin`` literal (it reaches the parquet
+#    scan as an In filter — row-group min/max and dictionary pruning find
+#    the hit files with a metadata pass); above it they stay a distinct-
+#    keys frame for broadcast semi/anti joins (a giant In-literal is an
+#    expression-size risk; the broadcast still passes the keys through
+#    the driver, so that regime is bounded by broadcast size). Same
+#    discipline as the graph family's two-regime gates.
+# 2. CENSUS: one job over the current snapshot counts, per hit file, the
+#    rows deleted and the rows updated.
+# 3. REWRITE: each hit file's survivors (rows whose key is in no change;
+#    a NULL key never matches) plus the update rows routed to the files
+#    that held their key. An update row whose key no hit file held — a
+#    NULL key included — is an insert.
+# 4. PUBLISH, the only fork. A plain store writes every hit file's new
+#    content in ONE distributed job and swaps each file in place
+#    (_rewrite_in_place), then appends one insert file. A versioned store
+#    (sinks/manifest.py) stages new files and commits one manifest, with
+#    the commit lock held from the census to the publish: the keep list
+#    is only valid against the snapshot it was computed from, so a
+#    second writer fails with ConcurrentWriteError instead.
+#
+# A batch hitting thousands of files costs O(1) Spark jobs, not one per
+# file, and a file hit by both a delete and an update is rewritten once.
 # --------------------------------------------------------------------------
 
 _ISIN_MAX = 10_000
@@ -300,36 +312,19 @@ def _check_reserved(schema) -> None:
         )
 
 
-def _keys_frame(spark, key_col: str, dtype, keys) -> DataFrame:
-    return spark.createDataFrame(
-        [(k,) for k in keys], T.StructType([T.StructField(key_col, dtype)])
-    ).distinct()
-
-
-def _hit_semi(df: DataFrame, key_col: str, keys=None, keys_df=None) -> DataFrame:
-    """Rows of ``df`` whose key IS a change key (NULL keys never match)."""
-    if keys_df is None and len(keys) <= _ISIN_MAX:
-        return df.filter(
-            F.coalesce(F.col(key_col).isin(list(keys)), F.lit(False))
-        )
-    if keys_df is None:
-        keys_df = _keys_frame(
-            df.sparkSession, key_col, df.schema[key_col].dataType, keys
-        )
-    return df.join(F.broadcast(keys_df), key_col, "left_semi")
-
-
-def _hit_anti(df: DataFrame, key_col: str, keys=None, keys_df=None) -> DataFrame:
-    """Rows of ``df`` whose key is NOT a change key (NULL keys kept)."""
-    if keys_df is None and len(keys) <= _ISIN_MAX:
-        return df.filter(
-            ~F.coalesce(F.col(key_col).isin(list(keys)), F.lit(False))
-        )
-    if keys_df is None:
-        keys_df = _keys_frame(
-            df.sparkSession, key_col, df.schema[key_col].dataType, keys
-        )
-    return df.join(F.broadcast(keys_df), key_col, "left_anti")
+def _key_filter(df: DataFrame, key_col: str, keys, how: str) -> DataFrame:
+    """Rows of ``df`` whose key is (``how="left_semi"``) or is not
+    (``"left_anti"``) in ``keys``, a list or a key frame. A NULL key
+    never matches, so the anti side keeps NULL-keyed rows."""
+    if isinstance(keys, list) and len(keys) <= _ISIN_MAX:
+        hit = F.coalesce(F.col(key_col).isin(keys), F.lit(False))
+        return df.filter(hit if how == "left_semi" else ~hit)
+    if isinstance(keys, list):
+        dtype = df.schema[key_col].dataType
+        keys = df.sparkSession.createDataFrame(
+            [(k,) for k in keys], T.StructType([T.StructField(key_col, dtype)])
+        ).distinct()
+    return df.join(F.broadcast(keys), key_col, how)
 
 
 def _drop_crc_sidecar(f: str) -> None:
@@ -413,6 +408,148 @@ def _rewrite_in_place(
     return rewritten, removed
 
 
+def _probe(changes: DataFrame, key_col: str, op_col: str | None = None):
+    """Step 1 in ONE action: (all change keys, keys to update), each a
+    list below _ISIN_MAX keys or a distinct-keys frame above it. Without
+    ``op_col`` every change is an update and both are the same object.
+    With one op per key the (key, op) frame is key-sized, so overflow
+    past _ISIN_MAX rows means the large regime."""
+    cols = [key_col, op_col] if op_col else [key_col]
+    rows = changes.select(*cols).distinct().limit(_ISIN_MAX + 1).collect()
+    if len(rows) <= _ISIN_MAX:
+        keys = [r[0] for r in rows]
+        return keys, ([r[0] for r in rows if r[1] == "U"] if op_col else keys)
+    keys = changes.select(key_col).distinct()
+    if not op_col:
+        return keys, keys
+    return keys, changes.filter(F.col(op_col) == "U").select(key_col).distinct()
+
+
+def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> dict:
+    """Steps 2-4 for one change set. ``keys`` are all change keys and
+    ``upd_keys`` the keys to update (see _probe); ``upd`` holds the
+    update rows, and is None — like ``upd_keys`` — for a delete. ``tag``
+    names a versioned store's staged files. Returns the path's counters;
+    a versioned store adds ``version`` and, when it commits, ``files``."""
+    root = path.rstrip("/")
+    versioned = manifest.is_versioned(root)
+    with manifest._commit_lock(root) if versioned else contextlib.nullcontext():
+        if versioned:
+            snap = manifest.read_manifest(root)
+            store, scanned = manifest.read_store(spark, root), len(snap["files"])
+        else:
+            store = spark.read.parquet(path)
+            scanned = len(store.inputFiles())  # the scan's own listing
+        _check_reserved(store.schema)
+
+        # step 2: per hit file, rows hit and rows updated; input_file_name()
+        # is grouped map-side in the scan's stage
+        hit = _key_filter(store, key_col, keys, "left_semi")
+        if upd_keys is None:
+            u = F.lit(0)
+        elif upd_keys is keys:
+            u = F.lit(1)
+        elif isinstance(upd_keys, list):
+            u = F.coalesce(F.col(key_col).isin(upd_keys), F.lit(False)).cast("int")
+        else:
+            marks = upd_keys.withColumn("_u", F.lit(1))
+            hit = hit.join(F.broadcast(marks), key_col, "left")
+            u = F.coalesce(F.col("_u"), F.lit(0))
+        census = (
+            hit.groupBy(F.input_file_name().alias("_f"))
+            .agg(F.count(F.lit(1)).alias("_n"), F.sum(u).alias("_u"))
+            .collect()
+        )
+        hit_uris = [r["_f"] for r in census]
+        n_upd = sum(r["_u"] for r in census)
+        c = {
+            "files_scanned": scanned,
+            "files_hit": len(hit_uris),
+            "files_rewritten": 0,
+            "files_removed": 0,
+            "rows_deleted": sum(r["_n"] for r in census) - n_upd,
+            "rows_updated": n_upd,
+            "rows_inserted": 0,
+        }
+        if versioned and upd is None and not hit_uris:
+            return {**c, "version": snap["version"]}  # nothing to commit
+
+        # step 3. Update rows conform to the store schema — order AND
+        # types: an INT literal column next to INT64 files breaks every
+        # later mixed read
+        if upd is not None:
+            upd = upd.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name)
+                  for f in store.schema.fields]
+            )
+        content = filekeys = None
+        inserts = upd
+        if hit_uris:
+            src = spark.read.parquet(*hit_uris).withColumn("_src", F.input_file_name())
+            content = _key_filter(src, key_col, keys, "left_anti")
+            if n_upd:
+                # (file, key) presence pairs: bounded by the change-key
+                # count, so broadcastable
+                filekeys = (
+                    _key_filter(src, key_col, upd_keys, "left_semi")
+                    .select("_src", key_col)
+                    .distinct()
+                    .localCheckpoint()
+                )
+                matched = F.broadcast(filekeys.select(key_col).distinct())
+                inserts = upd.join(matched, key_col, "left_anti")
+        if inserts is not None:
+            c["rows_inserted"] = inserts.count()
+
+        # step 4
+        if not versioned:
+            if hit_uris:
+                if filekeys is not None:  # to every file that held the key
+                    routed = upd.join(F.broadcast(filekeys), key_col)
+                    content = content.unionByName(routed)
+                c["files_rewritten"], c["files_removed"] = _rewrite_in_place(
+                    spark, path, hit_uris, content
+                )
+            if c["rows_inserted"]:
+                # one appended file per call; compact_parquet absorbs the
+                # accumulation later
+                inserts.coalesce(1).write.mode("append").parquet(path)
+            return c
+        version, staged = snap["version"] + 1, []
+        if hit_uris:
+            content = content.drop("_src")
+            if filekeys is not None:
+                content = content.unionByName(upd.join(matched, key_col, "left_semi"))
+            if filekeys is not None or not content.isEmpty():
+                staged = manifest._stage_dataframe(
+                    content, root, version, tag, len(hit_uris)
+                )
+            # superseded files are removed from the snapshot, never from disk
+            c["files_rewritten"] = len(hit_uris)
+            c["files_removed"] = 0 if staged else len(hit_uris)
+        if c["rows_inserted"]:
+            staged += manifest._stage_dataframe(inserts, root, version, "ins", 1)
+        hit_names = {os.path.basename(u.removeprefix("file://")) for u in hit_uris}
+        keep = [f for f in snap["files"] if f not in hit_names]
+        c.update(
+            manifest.commit_mutation(
+                root, keep, staged, snap.get("schema_sample"), _locked=True
+            )
+        )
+        return c
+
+
+def _none_last(k):
+    """Sort key for refused keys: a NULL key sorts after every other."""
+    return (k is None, 0 if k is None else k)
+
+
+def _report(c: dict, *names: str) -> dict:
+    """``names`` from _mutate's counters, plus a versioned store's
+    ``version`` and ``files``."""
+    return {n: c[n] for n in (*names, "version", "files") if n in c}
+
+
 def delete_keys(
     spark,
     path: str,
@@ -422,62 +559,23 @@ def delete_keys(
     """Targeted delete at rest (the right-to-be-forgotten maintenance
     pass): remove every row whose ``key_col`` is in ``keys`` by
     REWRITING ONLY THE FILES THAT CONTAIN THEM — at 100 TB a delete of a
-    handful of keys must not rewrite the corpus. Works on any parquet
-    layout; on a range-clustered/z-ordered store (write_range_clustered,
-    zorder_write) the hit-file scan itself prunes by footer min-max, so
-    finding the files costs a metadata pass plus the matching
-    row-groups.
-
-    Mechanics: the hit files are read as ONE DataFrame, the survivors
-    (NULL-safe — a null key never matches) written in ONE distributed
-    job to a shadow dir partitioned by file id, and each ORIGINAL FILE
-    REPLACED IN PLACE (os.replace — atomic within a filesystem); a file
-    whose every row matched is deleted outright. Untouched files are
-    never opened for write, so concurrent readers of other files are
-    unaffected. Job count is O(1) in the number of hit files. Key
-    targeting is two-regime: an In-literal (parquet row-group pruning)
-    below _ISIN_MAX keys, a broadcast anti join above. Single writer
-    assumed.
+    handful of keys must not rewrite the corpus. On a range-clustered /
+    z-ordered store (write_range_clustered, zorder_write) the census
+    prunes by footer min-max, so finding the files costs a metadata pass
+    plus the matching row-groups. A NULL key never matches. Plain stores
+    may be hive-partitioned.
 
     Returns {"files_scanned", "files_rewritten", "files_removed",
-    "rows_deleted"}.
+    "rows_deleted"}. A plain store counts a file left with no survivor
+    as removed, not rewritten. A versioned store counts every hit file
+    as rewritten, as removed only when no survivor was staged, and adds
+    "version" and "files" ("files" only when a key hit: a delete that
+    hits nothing commits nothing).
     """
-    import glob as g
-
-    from dumpty_spark.sinks import manifest as _m
-
-    if _m.is_versioned(path.rstrip("/")):
-        return _m.delete_keys_versioned(spark, path.rstrip("/"), key_col, keys)
-
-    all_files = [
-        p
-        for p in g.glob(os.path.join(path.rstrip("/"), "**", "part-*"), recursive=True)
-        if os.path.isfile(p)
-    ]
-    store = spark.read.parquet(path)
-    _check_reserved(store.schema)
-    hits = (
-        _hit_semi(store, key_col, keys)
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
+    c = _mutate(spark, path, key_col, list(keys), None, None, "del")
+    return _report(
+        c, "files_scanned", "files_rewritten", "files_removed", "rows_deleted"
     )
-    rows_deleted = sum(r["_n"] for r in hits)
-    hit_uris = [r["_f"] for r in hits]
-
-    rewritten = removed = 0
-    if hit_uris:
-        src = spark.read.parquet(*hit_uris).withColumn(
-            "_src", F.input_file_name()
-        )
-        survivors = _hit_anti(src, key_col, keys)
-        rewritten, removed = _rewrite_in_place(spark, path, hit_uris, survivors)
-    return {
-        "files_scanned": len(all_files),
-        "files_rewritten": rewritten,
-        "files_removed": removed,
-        "rows_deleted": rows_deleted,
-    }
 
 
 def upsert_keys(
@@ -486,20 +584,13 @@ def upsert_keys(
     key_col: str,
     updates: DataFrame,
 ) -> dict:
-    """Keyed upsert at rest (the MERGE half of delete_keys): rows in
-    ``updates`` replace same-key rows in the store; keys not yet present
-    are appended. Only files that contain an updated key are rewritten —
-    at 100 TB a CDC trickle must not rewrite the corpus — and the new
-    keys land in fresh appended files sized by the normal writer path.
-
-    Below _ISIN_MAX distinct keys the key list is collected driver-side
-    for In-literal file targeting (parquet row-group pruning); above it
-    the keys stay distributed and targeting is a broadcast semi join.
-    The row payload always stays distributed, and every hit file is
-    rewritten in ONE distributed job (shadow dir keyed by file id +
-    atomic swaps) — O(1) Spark jobs in the number of hit files. Schema
-    must match the store's. Single writer assumed. Returns
-    {"files_rewritten", "rows_updated", "rows_inserted"}.
+    """Keyed upsert at rest: rows in ``updates`` replace same-key rows in
+    the store; keys not yet present (and NULL keys) are inserted. Only
+    files that hold an updated key are rewritten, and the inserts land
+    as one new file. Update rows are cast to the store schema; several
+    rows for one key are all kept. Returns {"files_rewritten",
+    "rows_updated", "rows_inserted"}, plus "version" and "files" on a
+    versioned store, which commits even when nothing matched.
 
     This is also the ``foreachBatch`` body for a streaming CDC sink:
     ``stream.writeStream.foreachBatch(lambda b, _: upsert_keys(spark,
@@ -507,80 +598,12 @@ def upsert_keys(
     (idempotent per batch — replaying a batch re-applies the same
     values).
     """
-    from dumpty_spark.sinks import manifest as _m
-
-    if _m.is_versioned(path.rstrip("/")):
-        return _m.upsert_keys_versioned(spark, path.rstrip("/"), key_col, updates)
-
-    updates = updates.localCheckpoint()  # evaluated 3×; plan may be streaming
-    # regime gate in ONE action (r11 optimization, guide §2.4): a
-    # limit-probe collect replaces the count-then-collect pair; overflow
-    # past _ISIN_MAX rows means the large regime, where keys stay a
-    # DataFrame and are never collected.
-    kdist = updates.select(key_col).distinct()
-    probe_rows = kdist.limit(_ISIN_MAX + 1).collect()
-    if len(probe_rows) <= _ISIN_MAX:
-        keys, keys_df = [r[0] for r in probe_rows], None
-    else:
-        keys, keys_df = None, kdist
-
-    store = spark.read.parquet(path)
-    _check_reserved(store.schema)
-    hits = (
-        _hit_semi(store, key_col, keys, keys_df)
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    hit_uris = [r["_f"] for r in hits]
-    rows_updated = sum(r["_n"] for r in hits)
-
-    # conform to the store schema — order AND types (an INT-typed literal
-    # column appended next to INT64 files breaks later mixed reads)
-    upd = updates.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in store.schema.fields]
-    )
-
-    rewritten = 0
-    if hit_uris:
-        src = spark.read.parquet(*hit_uris).withColumn(
-            "_src", F.input_file_name()
-        )
-        # (file, key) presence pairs route each update row to every file
-        # that previously held its key; bounded by the change-key count,
-        # so broadcastable
-        filekeys = (
-            _hit_semi(src, key_col, keys, keys_df)
-            .select("_src", key_col)
-            .distinct()
-            .localCheckpoint()
-        )
-        survivors = _hit_anti(src, key_col, keys, keys_df)
-        routed = upd.join(F.broadcast(filekeys), key_col)
-        rewritten, removed = _rewrite_in_place(
-            spark, path, hit_uris, survivors.unionByName(routed)
-        )
-        rewritten += removed
-        matched = filekeys.select(key_col).distinct()
-    else:
-        matched = None
-
-    # NULL-safe (same as the versioned path): a null-keyed update row can
-    # never match by key, so it is an insert — a bare anti join keeps it
-    inserts = (
-        upd.join(F.broadcast(matched), key_col, "left_anti")
-        if matched is not None
-        else upd
-    )
-    n_inserts = inserts.count()
-    if n_inserts:
-        # a CDC trickle is small — land it as ONE appended file per call
-        # and let compact_parquet absorb the accumulation later
-        inserts.coalesce(1).write.mode("append").parquet(path)
+    updates = updates.localCheckpoint()  # read several times; plan may be streaming
+    keys, _ = _probe(updates, key_col)
+    c = _mutate(spark, path, key_col, keys, keys, updates, "ups")
     return {
-        "files_rewritten": rewritten,
-        "rows_updated": rows_updated,
-        "rows_inserted": n_inserts,
+        "files_rewritten": c["files_hit"],
+        **_report(c, "rows_updated", "rows_inserted"),
     }
 
 
@@ -596,21 +619,10 @@ def merge_keys(
     plus the store's payload columns — WHEN MATCHED AND op='D' THEN
     DELETE, WHEN MATCHED AND op='U' THEN UPDATE, WHEN NOT MATCHED AND
     op='U' THEN INSERT. Unlike delete_keys-then-upsert_keys, a file hit
-    by both a delete and an update is rewritten ONCE: every hit file's
-    survivors (rows whose key appears in NO change) are merged with
-    that file's share of the updates and the file is replaced in place;
-    never-matched update keys land as one appended sized file. At
-    100 TB a CDC batch must cost O(hit files), and each hit file must
-    cost ONE rewrite regardless of the op mix.
-
-    Same contracts as upsert_keys: two-regime key targeting
-    (In-literal below _ISIN_MAX distinct keys, broadcast join above —
-    the change keys are never collected as a Python In-literal in the
-    large regime — the broadcast still bounds it by driver memory),
-    store-conformed schema, idempotent per batch, single writer, ONE
-    distributed rewrite job — O(1) Spark jobs in the number of hit
-    files. Returns {"files_rewritten", "rows_deleted", "rows_updated",
-    "rows_inserted"}.
+    by both a delete and an update is rewritten ONCE. Same contracts as
+    upsert_keys, on plain and versioned stores alike. Returns
+    {"files_rewritten", "rows_deleted", "rows_updated",
+    "rows_inserted"}, plus "version" and "files" on a versioned store.
     """
     changes = changes.localCheckpoint()
 
@@ -635,17 +647,18 @@ def merge_keys(
         .limit(5)
         .collect()
     )
-    # unknown ops first: the key census below targets ALL change keys, so
-    # a row with op outside {'U','D'} would anti-join its store rows out
-    # with no routed replacement — silent deletion at rest. Refuse.
-    bad = sorted(r[key_col] for r in chk if r["_nbad"] > 0)
+
+    # unknown ops first: the census targets ALL change keys, so a row
+    # with op outside {'U','D'} would anti-join its store rows out with
+    # no routed replacement — silent deletion at rest. Refuse.
+    bad = sorted((r[key_col] for r in chk if r["_nbad"] > 0), key=_none_last)
     if bad:
         raise ValueError(
             f"merge_keys: rows with op outside {{'U','D'}} for keys "
             f"{bad[:5]} — unknown ops would silently delete at rest; "
             f"filter or map them before the MERGE"
         )
-    both = sorted(r[key_col] for r in chk if r["_nops"] > 1)
+    both = sorted((r[key_col] for r in chk if r["_nops"] > 1), key=_none_last)
     if both:
         raise ValueError(
             f"merge_keys: keys appear with BOTH ops (ambiguous MERGE): "
@@ -656,79 +669,10 @@ def merge_keys(
             "merge_keys: duplicate update rows for one key (ambiguous MERGE)"
         )
 
-    # regime gate in ONE action (r11 optimization, guide §2.4 — the old
-    # shape ran count + two collects over the same checkpointed frame):
-    # the ambiguity gates above guarantee one op per key, so the distinct
-    # (key, op) frame is exactly key-sized — collect it with a
-    # limit-probe; overflow past _ISIN_MAX rows means the large regime,
-    # where keys stay DataFrames and are never collected.
-    kop = changes.select(key_col, op_col).distinct()
-    probe_rows = kop.limit(_ISIN_MAX + 1).collect()
-    if len(probe_rows) <= _ISIN_MAX:
-        all_keys = [r[0] for r in probe_rows]
-        upd_keys = [r[0] for r in probe_rows if r[1] == "U"]
-        all_keys_df = upd_keys_df = None
-    else:
-        all_keys = upd_keys = None
-        all_keys_df = changes.select(key_col).distinct()
-        upd_keys_df = (
-            changes.filter(F.col(op_col) == "U").select(key_col).distinct()
-        )
-
-    store = spark.read.parquet(path)
-    _check_reserved(store.schema)
-    # per-file hit census with op attribution: the (key, op) frame is
-    # change-sized, so broadcastable; input_file_name() is grouped
-    # map-side in the same stage as the scan
-    opk = changes.select(
-        F.col(key_col).alias("_ck"), F.col(op_col).alias("_cop")
-    ).distinct()
-    hits = (
-        _hit_semi(store, key_col, all_keys, all_keys_df)
-        .join(F.broadcast(opk), F.col(key_col) == F.col("_ck"))
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(
-            F.sum((F.col("_cop") == "D").cast("int")).alias("_d"),
-            F.sum((F.col("_cop") == "U").cast("int")).alias("_u"),
-        )
-        .collect()
-    )
-    hit_uris = [r["_f"] for r in hits]
-    rows_deleted = sum(r["_d"] for r in hits)
-    rows_updated = sum(r["_u"] for r in hits)
-
-    upd = changes.filter(F.col(op_col) == "U").select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name)
-          for f in store.schema.fields]
-    )
-
-    rewritten = 0
-    if hit_uris:
-        src = spark.read.parquet(*hit_uris).withColumn(
-            "_src", F.input_file_name()
-        )
-        filekeys = (
-            _hit_semi(src, key_col, upd_keys, upd_keys_df)
-            .select("_src", key_col)
-            .distinct()
-            .localCheckpoint()
-        )
-        survivors = _hit_anti(src, key_col, all_keys, all_keys_df)
-        routed = upd.join(F.broadcast(filekeys), key_col)
-        a, b = _rewrite_in_place(
-            spark, path, hit_uris, survivors.unionByName(routed)
-        )
-        rewritten = a + b
-        matched = filekeys.select(key_col).distinct()
-        inserts = upd.join(F.broadcast(matched), key_col, "left_anti")
-    else:
-        inserts = upd
-    n_inserts = inserts.count()
-    if n_inserts:
-        inserts.coalesce(1).write.mode("append").parquet(path)
+    keys, upd_keys = _probe(changes, key_col, op_col)
+    upd = changes.filter(F.col(op_col) == "U")
+    c = _mutate(spark, path, key_col, keys, upd_keys, upd, "mrg")
     return {
-        "files_rewritten": rewritten,
-        "rows_deleted": rows_deleted,
-        "rows_updated": rows_updated,
-        "rows_inserted": n_inserts,
+        "files_rewritten": c["files_hit"],
+        **_report(c, "rows_deleted", "rows_updated", "rows_inserted"),
     }

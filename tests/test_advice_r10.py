@@ -59,6 +59,20 @@ def test_merge_keys_refuses_unknown_ops(spark):
     with pytest.raises(ValueError, match="outside"):
         merge_keys(spark, store, "k", lower)
 
+    # a NULL key among the refused keys is named in the ValueError — not
+    # a TypeError from sorting None against the other keys
+    null_unknown = spark.createDataFrame(
+        [(None, "x", "I"), (5, "y", "I")], "k long, val string, op string"
+    )
+    with pytest.raises(ValueError, match="outside"):
+        merge_keys(spark, store, "k", null_unknown)
+    null_both = spark.createDataFrame(
+        [(None, "x", "D"), (None, "y", "U"), (6, "a", "D"), (6, "b", "U")],
+        "k long, val string, op string",
+    )
+    with pytest.raises(ValueError, match="BOTH ops"):
+        merge_keys(spark, store, "k", null_both)
+
     # the store is untouched by any refused merge
     after = {r["k"]: r["val"] for r in spark.read.parquet(store).collect()}
     assert after == before

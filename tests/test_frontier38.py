@@ -3,10 +3,12 @@
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dumpty_spark.queries import REGISTRY
-from dumpty_spark.session import scratch_cleanup, warehouse_scratch
+from dumpty_spark.session import last_job_id, scratch_cleanup, warehouse_scratch
+from dumpty_spark.sinks import manifest as M
 from dumpty_spark.sinks.writers import merge_keys, write_range_clustered
 
 
@@ -23,8 +25,6 @@ def test_merge_keys_semantics_and_single_rewrite(spark):
         )
         # a key with BOTH ops is an ambiguous MERGE — refused like
         # Delta's multiple-source-rows-matched error
-        import pytest
-
         ambiguous = spark.createDataFrame(
             [(6, "x", "D"), (6, "boom", "U")], "k long, val string, op string"
         )
@@ -84,20 +84,18 @@ def test_merge_keys_file_fully_consumed(spark):
         scratch_cleanup(spark, scratch)
 
 
-def _count_jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup("default", "")
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+def _count_jobs(spark, fn):
+    """Jobs ``fn`` started, from every thread."""
+    j0 = last_job_id(spark)
+    fn()
+    return last_job_id(spark) - j0
 
 
-def test_merge_keys_job_count_constant_in_hit_files(spark):
+@pytest.mark.parametrize("kind", ["plain", "versioned"])
+def test_merge_keys_job_count_constant_in_hit_files(spark, kind):
     """The rewrite is ONE distributed job: total Spark job count must not
     grow with the number of hit files (the r8 per-file-loop shape cost
-    one job per file)."""
+    one job per file), on a plain and a versioned store alike."""
     scratch = warehouse_scratch(spark, "mergejobs")
     try:
         counts = {}
@@ -106,7 +104,13 @@ def test_merge_keys_job_count_constant_in_hit_files(spark):
                 [(i, f"v{i}") for i in range(1, 121)], "k long, val string"
             )
             store = f"{scratch}/{tag}"
-            write_range_clustered(base, store, ["k"], num_files=n_files)
+            if kind == "plain":
+                write_range_clustered(base, store, ["k"], num_files=n_files)
+            else:
+                M.create_store(
+                    base.repartitionByRange(n_files, "k").sortWithinPartitions("k"),
+                    store,
+                )
             # one delete + one update per range file → every file is hit
             ks = [1 + i * (120 // n_files) for i in range(n_files)]
             changes = spark.createDataFrame(
@@ -115,12 +119,15 @@ def test_merge_keys_job_count_constant_in_hit_files(spark):
                 "k long, val string, op string",
             )
             counts[tag] = _count_jobs(
-                spark, f"mergejobs-{tag}",
-                lambda: merge_keys(spark, store, "k", changes),
+                spark, lambda: merge_keys(spark, store, "k", changes)
             )
-            assert len(
-                [p for p in glob.glob(f"{store}/part-*") if os.path.isfile(p)]
-            ) == n_files
+            if kind == "plain":
+                files = [
+                    p for p in glob.glob(f"{store}/part-*") if os.path.isfile(p)
+                ]
+            else:
+                files = M.read_manifest(store)["files"]
+            assert len(files) == n_files
         assert counts["many"] <= counts["few"], counts
     finally:
         scratch_cleanup(spark, scratch)

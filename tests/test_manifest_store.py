@@ -6,12 +6,18 @@ every point inside the commit sequence.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from dumpty_spark.sinks import manifest as M
-from dumpty_spark.sinks.writers import compact_parquet, delete_keys, upsert_keys
+from dumpty_spark.sinks.writers import (
+    compact_parquet,
+    delete_keys,
+    merge_keys,
+    upsert_keys,
+)
 
 
 @pytest.fixture()
@@ -123,14 +129,50 @@ def test_compact_through_new_commit_path(spark, store):
     assert M.current_version(root) == 1
 
 
+def _mutation(spark, root, docs, op, keys):
+    """One keyed mutation of ``keys`` by ``op``, the snapshot it must
+    leave and the row counters it must report: delete drops them all,
+    upsert sets their n_chars to -1, merge deletes the first two and
+    updates the rest."""
+    before = snapshot(spark, root)
+    hit = docs.filter(F.col("doc_id").isin(keys)).withColumn("n_chars", F.lit(-1))
+    if op == "delete":
+        return (
+            lambda: delete_keys(spark, root, "doc_id", keys),
+            {k: v for k, v in before.items() if k not in keys},
+            {"rows_deleted": 5},
+        )
+    if op == "upsert":
+        return (
+            lambda: upsert_keys(spark, root, "doc_id", hit),
+            {k: -1 if k in keys else v for k, v in before.items()},
+            {"rows_updated": 5, "rows_inserted": 0},
+        )
+    changes = hit.withColumn(
+        "op", F.when(F.col("doc_id").isin(keys[:2]), "D").otherwise("U")
+    )
+    return (
+        lambda: merge_keys(spark, root, "doc_id", changes),
+        {
+            k: -1 if k in keys else v
+            for k, v in before.items()
+            if k not in keys[:2]
+        },
+        {"rows_deleted": 2, "rows_updated": 3, "rows_inserted": 0},
+    )
+
+
+@pytest.mark.parametrize("op", ["delete", "upsert", "merge"])
 @pytest.mark.parametrize("crash_point", ["pre_manifest", "pre_pointer_swap"])
-def test_crash_mid_commit_readers_see_old_snapshot(spark, store, crash_point):
+def test_crash_mid_commit_readers_see_old_snapshot(spark, store, crash_point, op):
     """The verdict's crash-injection contract: kill the writer at each
     point inside the commit sequence; readers must resolve the old
-    snapshot exactly, and a retry must succeed cleanly."""
+    snapshot exactly, and a retry must succeed cleanly — for every keyed
+    mutator."""
     root, docs = store
     before = snapshot(spark, root)
     keys = sorted(before)[:5]
+    mutate, expected, counts = _mutation(spark, root, docs, op, keys)
 
     def boom(point):
         if point == crash_point:
@@ -139,22 +181,133 @@ def test_crash_mid_commit_readers_see_old_snapshot(spark, store, crash_point):
     M._crash_hook = boom
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            delete_keys(spark, root, "doc_id", keys)
+            mutate()
     finally:
         M._crash_hook = None
 
-    # pointer untouched → full old snapshot, not a half-delete
+    # pointer untouched → full old snapshot, not a half-mutation
     assert M.current_version(root) == 0
     assert snapshot(spark, root) == before
 
     # retry completes; staged leftovers from the crashed attempt never
     # collide (version-prefixed names) and vacuum reclaims them
-    stats = delete_keys(spark, root, "doc_id", keys)
-    assert stats["rows_deleted"] == 5
-    assert set(snapshot(spark, root)) == set(before) - set(keys)
+    stats = mutate()
+    assert {k: stats[k] for k in counts} == counts
+    assert M.current_version(root) == 1
+    assert snapshot(spark, root) == expected
     rec = M.vacuum(root, keep_versions=1)
     assert rec["removed_files"] >= 1
-    assert set(snapshot(spark, root)) == set(before) - set(keys)
+    assert snapshot(spark, root) == expected
+
+
+def _plain_copy(root, tmp_path):
+    """A plain parquet directory holding the current snapshot's files."""
+    plain = str(tmp_path / "plain")
+    os.makedirs(plain)
+    for i, f in enumerate(M.data_files(root)):
+        shutil.copy(f, os.path.join(plain, f"part-{i:05d}.parquet"))
+    return plain
+
+
+def test_merge_on_versioned_store_matches_plain(spark, store, tmp_path):
+    """merge_keys on a versioned store: one mixed batch (deletes,
+    updates, a new key) gives the same rows and the same counters as on
+    a plain directory holding the same files, in exactly one commit."""
+    root, docs = store
+    plain = _plain_copy(root, tmp_path)
+    keys = sorted(snapshot(spark, root))
+    new_key = keys[-1] + 1
+    changes = (
+        docs.filter(F.col("doc_id").isin(keys[:6]))
+        .withColumn("n_chars", F.lit(-1))
+        .withColumn("op", F.when(F.col("doc_id").isin(keys[:3]), "D").otherwise("U"))
+        .unionByName(
+            docs.limit(1)
+            .withColumn("doc_id", F.lit(new_key))
+            .withColumn("n_chars", F.lit(-2))
+            .withColumn("op", F.lit("U"))
+        )
+    )
+    v0 = M.current_version(root)
+
+    got = merge_keys(spark, root, "doc_id", changes)
+    want = merge_keys(spark, plain, "doc_id", changes)
+
+    assert M.current_version(root) == v0 + 1 == got.pop("version")
+    assert got.pop("files") == len(M.read_manifest(root)["files"])
+    assert got == want
+    assert want["rows_deleted"] == 3 and want["rows_updated"] == 3
+    assert want["rows_inserted"] == 1
+
+    def rows(df):
+        return sorted(map(repr, df.select(*sorted(df.columns)).collect()))
+
+    assert rows(M.read_store(spark, root)) == rows(spark.read.parquet(plain))
+
+
+def test_file_counters_keep_their_meaning_per_entry_point(spark, store, tmp_path):
+    """The return dicts keep each entry point's file-counter meaning: a
+    plain delete_keys counts a file left with no survivor as removed and
+    not rewritten, a plain merge_keys (like upsert_keys) counts every hit
+    file as rewritten, and a versioned delete_keys counts every hit file
+    as rewritten and as removed only when no survivor was staged; a
+    versioned delete that hits nothing commits nothing."""
+    import pyarrow.parquet as pq
+
+    root, docs = store
+    plain = _plain_copy(root, tmp_path)
+    ids = [
+        pq.read_table(f, columns=["doc_id"]).column(0).to_pylist()
+        for f in M.data_files(root)
+    ]
+    gone = ids[0] + ids[1][:1]  # all of file 0, one row of file 1
+
+    assert delete_keys(spark, plain, "doc_id", gone) == {
+        "files_scanned": 4,
+        "files_rewritten": 1,
+        "files_removed": 1,
+        "rows_deleted": len(gone),
+    }
+    assert delete_keys(spark, root, "doc_id", gone) == {
+        "version": 1,
+        "files": 4,
+        "files_scanned": 4,
+        "files_rewritten": 2,
+        "files_removed": 0,
+        "rows_deleted": len(gone),
+    }
+    assert delete_keys(spark, root, "doc_id", ids[2]) == {
+        "version": 2,
+        "files": 3,
+        "files_scanned": 4,
+        "files_rewritten": 1,
+        "files_removed": 1,
+        "rows_deleted": len(ids[2]),
+    }
+    assert delete_keys(spark, root, "doc_id", [-1]) == {
+        "version": 2,
+        "files_scanned": 3,
+        "files_rewritten": 0,
+        "files_removed": 0,
+        "rows_deleted": 0,
+    }
+    assert M.current_version(root) == 2
+
+    changes = docs.filter(F.col("doc_id").isin(ids[2] + ids[3][:1])).withColumn(
+        "op", F.when(F.col("doc_id").isin(ids[2]), "D").otherwise("U")
+    )
+    assert merge_keys(spark, plain, "doc_id", changes) == {
+        "files_rewritten": 2,
+        "rows_deleted": len(ids[2]),
+        "rows_updated": 1,
+        "rows_inserted": 0,
+    }
+    updates = docs.filter(F.col("doc_id") == ids[3][1])
+    assert upsert_keys(spark, plain, "doc_id", updates) == {
+        "files_rewritten": 1,
+        "rows_updated": 1,
+        "rows_inserted": 0,
+    }
 
 
 def test_null_keyed_rows_survive_delete_and_upsert(spark, store):
@@ -338,7 +491,7 @@ def test_null_keyed_update_rows_become_inserts(spark, store):
         {**one, "doc_id": None, "n_chars": 1234},            # null-keyed
     ]
     updates = spark.createDataFrame(upd_rows, schema)
-    stats = M.upsert_keys_versioned(spark, root, "doc_id", updates)
+    stats = upsert_keys(spark, root, "doc_id", updates)
     assert stats["rows_inserted"] == 1
     after = M.read_store(spark, root)
     assert after.count() == before + 1
