@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dumpty_spark.session import jvm
+
 
 def salted_join(
     large: DataFrame,
@@ -78,9 +80,8 @@ def write_bucketed(
     # a previous PROCESS may have left the managed location behind while
     # this session's metastore has no such table — saveAsTable refuses
     # (LOCATION_ALREADY_EXISTS); clear the orphan dir through Hadoop FS
-    jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    loc = jvm.org.apache.hadoop.fs.Path(
+    loc = jvm(spark, "org.apache.hadoop.fs.Path")(
         spark.conf.get("spark.sql.warehouse.dir"), table.lower()
     )
     fs = loc.getFileSystem(hconf)

@@ -100,11 +100,13 @@ def _process_table(
         state.predicates = plan.predicates or None
 
     out = normalize_df(df) if cfg.normalize_schema else df
-    # X7 counter rides the write job itself (Observation): zero extra
-    # jobs, the Spark analog of the reference's load-job-reported
-    # output_rows (gcp.py:183) — the BQ job doesn't re-scan GCS either
-    obs = Observation(f"extract:{name}")
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows_written"))
+    if cfg.sink_format == "json":
+        # X7 counter rides the write job itself (Observation): zero extra
+        # jobs, the Spark analog of the reference's load-job-reported
+        # output_rows (gcp.py:183) — the BQ job doesn't re-scan GCS
+        # either. A parquet sink reconciles from its footers instead.
+        obs = Observation(f"extract:{name}")
+        out = out.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     path = f"{cfg.sink_dir}/{name}"
     # files: last run's size advice, else one per planned slice, and at
     # least one per rows_per_partition rows, so a large table read

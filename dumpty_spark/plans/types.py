@@ -22,7 +22,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _NORMALIZE_RE = re.compile(r"[^a-zA-Z0-9]")
@@ -38,9 +37,13 @@ def normalize_df(df: DataFrame) -> DataFrame:
     """Rename-all projection (SURVEY P1, reference pipeline.py:168-170).
 
     A pure projection — Catalyst collapses it into the scan, so it is free
-    at any scale.
+    at any scale. A frame whose names are all normalized already comes
+    back as it is, and any other is renamed by one ``toDF``: a column
+    expression per name would cost a dozen py4j round trips each.
     """
-    return df.select([F.col(f"`{c}`").alias(normalize_str(c)) for c in df.columns])
+    cols = df.columns
+    names = [normalize_str(c) for c in cols]
+    return df if names == cols else df.toDF(*names)
 
 
 @dataclass(frozen=True)

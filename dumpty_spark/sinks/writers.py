@@ -21,7 +21,9 @@ import glob
 import json
 import os
 from math import ceil
+from urllib.parse import unquote, urlsplit
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,14 +48,44 @@ def _sized(df: DataFrame, partitions: int | None) -> DataFrame:
     return df.repartition(partitions)
 
 
+# operators whose output partitions are their one child's, one to one
+# (nodeName up to its first space: "WholeStageCodegen (1)")
+_SAME_PARTITIONS = frozenset(
+    ("WholeStageCodegen", "InputAdapter", "ColumnarToRow", "Project", "Filter", "CollectMetrics")
+)
+
+
 def _partition_count(df: DataFrame) -> int | None:
     """How many partitions ``df``'s physical plan yields, answered by
-    planning alone. A plan AQE wraps holds an exchange or a subquery, and
-    asking its partition count would run them, so it gives None."""
+    planning alone: from the scan (``_scan_partitions``) when it can,
+    else by executing the plan on the driver, which starts no job but
+    generates its code. A plan AQE wraps holds an exchange or a
+    subquery, and asking its partition count would run them, so it
+    gives None."""
     plan = df._jdf.queryExecution().executedPlan()
+    n = _scan_partitions(plan)
+    if n is not None:
+        return n
     if plan.nodeName() == "AdaptiveSparkPlan" or not plan.subqueriesAll().isEmpty():
         return None
     return plan.execute().getNumPartitions()
+
+
+def _scan_partitions(plan) -> int | None:
+    """The partition count of a physical plan that is a chain of
+    operators keeping their child's partitions over one scan, read off
+    the scan's input RDD with no code generated; None for any other
+    plan."""
+    node, name = plan, plan.nodeName()
+    while name.split(" ", 1)[0] in _SAME_PARTITIONS:
+        node = node.child()
+        name = node.nodeName()
+    if not name.startswith("Scan "):
+        return None
+    try:
+        return node.inputRDDs().head().getNumPartitions()
+    except Py4JError:  # a scan with no input RDD
+        return None
 
 
 def write_ndjson(
@@ -278,8 +310,9 @@ def compact_parquet(
 # 2. CENSUS: one job over the current snapshot counts, per hit file, the
 #    rows deleted and the rows updated.
 # 3. REWRITE: each hit file's survivors (rows whose key is in no change;
-#    a NULL key never matches) plus the update rows routed to the files
-#    that held their key. An update row whose key no hit file held — a
+#    a NULL key never matches) plus the update rows, each routed to one
+#    file that held its key (the first by URI), so a key several files
+#    held is written once. An update row whose key no hit file held — a
 #    NULL key included — is an insert.
 # 4. PUBLISH, the only fork. A plain store writes every hit file's new
 #    content in ONE distributed job and swaps each file in place
@@ -345,17 +378,17 @@ def _rewrite_in_place(
 
     ``new_content`` carries the store columns plus ``src_col`` (the
     file:// URI of the file each row belongs to, as produced by
-    input_file_name()). All replacement content is written in a single
-    job to a shadow dir partitioned by file id — repartition by _fid
-    guarantees exactly one part file per hit file — then each original
-    is atomically swapped (os.replace) or removed when every one of its
-    rows was consumed. Returns (files_rewritten, files_removed).
+    input_file_name(), which ``hit_uris`` lists). All replacement
+    content is written in a single job to a shadow dir partitioned by
+    file id — repartition by _fid guarantees exactly one part file per
+    hit file — then each original is atomically swapped (os.replace) or
+    removed when every one of its rows was consumed. Returns (files_rewritten, files_removed).
     """
     import shutil
 
     if not hit_uris:
         return 0, 0
-    local = [u.removeprefix("file://") for u in hit_uris]
+    local = [_uri_path(u) for u in hit_uris]
     fmap = spark.createDataFrame(
         [(u, i) for i, u in enumerate(hit_uris)], "_path string, _fid int"
     )
@@ -408,6 +441,13 @@ def _rewrite_in_place(
     return rewritten, removed
 
 
+def _uri_path(uri: str) -> str:
+    """The local path of a file URI as input_file_name() gives it:
+    percent-encoded (a space is ``%20``), so decoded once here, by the
+    rules of java.net.URI.getPath."""
+    return unquote(urlsplit(uri).path)
+
+
 def _probe(changes: DataFrame, key_col: str, op_col: str | None = None):
     """Step 1 in ONE action: (all change keys, keys to update), each a
     list below _ISIN_MAX keys or a distinct-keys frame above it. Without
@@ -430,7 +470,9 @@ def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> di
     ``upd_keys`` the keys to update (see _probe); ``upd`` holds the
     update rows, and is None — like ``upd_keys`` — for a delete. ``tag``
     names a versioned store's staged files. Returns the path's counters;
-    a versioned store adds ``version`` and, when it commits, ``files``."""
+    a versioned store adds ``version`` and, when it commits, ``files``.
+    A versioned store commits only a change: a batch that hits no file
+    and inserts no row returns the current version."""
     root = path.rstrip("/")
     versioned = manifest.is_versioned(root)
     with manifest._commit_lock(root) if versioned else contextlib.nullcontext():
@@ -461,6 +503,7 @@ def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> di
             .collect()
         )
         hit_uris = [r["_f"] for r in census]
+        hit_paths = [_uri_path(u) for u in hit_uris]
         n_upd = sum(r["_u"] for r in census)
         c = {
             "files_scanned": scanned,
@@ -471,9 +514,6 @@ def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> di
             "rows_updated": n_upd,
             "rows_inserted": 0,
         }
-        if versioned and upd is None and not hit_uris:
-            return {**c, "version": snap["version"]}  # nothing to commit
-
         # step 3. Update rows conform to the store schema — order AND
         # types: an INT literal column next to INT64 files breaks every
         # later mixed read
@@ -485,26 +525,29 @@ def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> di
         content = filekeys = None
         inserts = upd
         if hit_uris:
-            src = spark.read.parquet(*hit_uris).withColumn("_src", F.input_file_name())
+            src = spark.read.parquet(*hit_paths).withColumn("_src", F.input_file_name())
             content = _key_filter(src, key_col, keys, "left_anti")
             if n_upd:
-                # (file, key) presence pairs: bounded by the change-key
-                # count, so broadcastable
+                # each updated key and ONE file that held it, so a key
+                # held by several files is written once: key-sized, so
+                # broadcastable
                 filekeys = (
                     _key_filter(src, key_col, upd_keys, "left_semi")
-                    .select("_src", key_col)
-                    .distinct()
+                    .groupBy(key_col)
+                    .agg(F.min("_src").alias("_src"))
                     .localCheckpoint()
                 )
-                matched = F.broadcast(filekeys.select(key_col).distinct())
+                matched = F.broadcast(filekeys.select(key_col))
                 inserts = upd.join(matched, key_col, "left_anti")
         if inserts is not None:
             c["rows_inserted"] = inserts.count()
+        if versioned and not hit_uris and not c["rows_inserted"]:
+            return {**c, "version": snap["version"]}  # nothing to commit
 
         # step 4
         if not versioned:
             if hit_uris:
-                if filekeys is not None:  # to every file that held the key
+                if filekeys is not None:  # to the one file chosen per key
                     routed = upd.join(F.broadcast(filekeys), key_col)
                     content = content.unionByName(routed)
                 c["files_rewritten"], c["files_removed"] = _rewrite_in_place(
@@ -529,7 +572,7 @@ def _mutate(spark, path: str, key_col: str, keys, upd_keys, upd, tag: str) -> di
             c["files_removed"] = 0 if staged else len(hit_uris)
         if c["rows_inserted"]:
             staged += manifest._stage_dataframe(inserts, root, version, "ins", 1)
-        hit_names = {os.path.basename(u.removeprefix("file://")) for u in hit_uris}
+        hit_names = {os.path.basename(f) for f in hit_paths}
         keep = [f for f in snap["files"] if f not in hit_names]
         c.update(
             manifest.commit_mutation(
@@ -588,9 +631,11 @@ def upsert_keys(
     the store; keys not yet present (and NULL keys) are inserted. Only
     files that hold an updated key are rewritten, and the inserts land
     as one new file. Update rows are cast to the store schema; several
-    rows for one key are all kept. Returns {"files_rewritten",
-    "rows_updated", "rows_inserted"}, plus "version" and "files" on a
-    versioned store, which commits even when nothing matched.
+    rows for one key are all kept, and a key held by several files is
+    written once. Returns {"files_rewritten", "rows_updated",
+    "rows_inserted"}, plus "version" and "files" on a versioned store
+    ("files" only when it commits: a batch that changes nothing commits
+    nothing and returns the current version).
 
     This is also the ``foreachBatch`` body for a streaming CDC sink:
     ``stream.writeStream.foreachBatch(lambda b, _: upsert_keys(spark,

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dumpty_spark.plans.planner import PartitionPlan, TableStats
+from dumpty_spark.session import jvm
 
 DEFAULT_FETCHSIZE = 2000  # reference config.yaml.example:52
 DIRTY_READ = "SET TRANSACTION ISOLATION LEVEL READ UNCOMMITTED"
@@ -180,15 +181,14 @@ def _fetch(spark: SparkSession, src: JdbcSource, sql: str) -> tuple[list[int], l
     result's java.sql.Types column codes and its rows, with values
     converted as ``run_query(...).collect()`` gives them. Starts no
     Spark job: for metadata-sized results only."""
-    jvm = spark.sparkContext._jvm
     opts = src.options()
-    params = jvm.java.util.HashMap()
+    params = jvm(spark, "java.util.HashMap")()
     for k, v in opts.items():
         params.put(k, str(v))
-    jopts = jvm.org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions(
-        jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(params)
+    jopts = jvm(spark, "org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions")(
+        jvm(spark, "org.apache.spark.api.python.PythonUtils", "toScalaMap")(params)
     )
-    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(src.url)
+    dialect = jvm(spark, "org.apache.spark.sql.jdbc.JdbcDialects", "get")(src.url)
     conn = dialect.createConnectionFactory(jopts).apply(-1)
     try:
         st = conn.createStatement()

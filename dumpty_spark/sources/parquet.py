@@ -20,7 +20,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_json_string
 
-from dumpty_spark.session import memo
+from dumpty_spark.session import jvm, memo
 
 TABLES = (
     "region",
@@ -84,9 +84,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
     schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
+    # what spark.read.schema(schema).parquet(path) runs, without the py4j
+    # round trips its Python wrapper adds (an active-session lookup and a
+    # path-list conversion)
+    jss = spark._jsparkSession
+    jreader = jss.read()
+    if schema is not None:
+        jreader = jreader.schema(jss.parseDataType(schema.json()))
+    df = DataFrame(jreader.format("parquet").load(path), spark)
     return _normalize_events_ts(df) if name == "events" else df
+
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+_CONVERTER = _PARQUET + "ParquetToSparkSchemaConverter"
 
 
 def footer_schema(spark: SparkSession, path: str) -> StructType | None:
@@ -108,35 +118,39 @@ def footer_schema(spark: SparkSession, path: str) -> StructType | None:
     first = _first_data_file(path)
     if first is None:
         return None
-    jss = spark._jsparkSession
-    sql_conf = jss.sessionState().conf()
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
     if sql_conf.isParquetSchemaMergingEnabled():
         return None
-    jvm = spark._jvm
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
-    conv_cls = pq.ParquetToSparkSchemaConverter
     try:
-        jpath = jvm.org.apache.hadoop.fs.Path(first)
-        hconf = jss.sessionState().newHadoopConf()
-        meta = pq.ParquetFooterReader.readFooter(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(jpath, hconf),
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        jpath = jvm(spark, "org.apache.hadoop.fs.Path")(first)
+        meta = jvm(spark, _PARQUET + "ParquetFooterReader", "readFooter")(
+            jvm(spark, "org.apache.parquet.hadoop.util.HadoopInputFile", "fromPath")(
+                jpath, state.newHadoopConf()
+            ),
+            jvm(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter",
+                "SKIP_ROW_GROUPS"),
         )
         # the arguments ParquetFileFormat.mergeSchemasInParallel passes:
         # session confs, and the constructor defaults for case
         # sensitivity, field ids and variant annotations
+        conv_cls = jvm(spark, _CONVERTER)
+        case_sensitive, field_ids, variants = memo(
+            spark, ("jvm", _CONVERTER, "constructor defaults"),
+            lambda: [getattr(conv_cls, f"$lessinit$greater$default${i}")() for i in (3, 6, 7)],
+        )
         converter = conv_cls(
             sql_conf.isParquetBinaryAsString(),
             sql_conf.isParquetINT96AsTimestamp(),
-            getattr(conv_cls, "$lessinit$greater$default$3")(),
+            case_sensitive,
             sql_conf.parquetInferTimestampNTZEnabled(),
             sql_conf.legacyParquetNanosAsLong(),
-            getattr(conv_cls, "$lessinit$greater$default$6")(),
-            getattr(conv_cls, "$lessinit$greater$default$7")(),
+            field_ids,
+            variants,
             sql_conf.parquetReaderRespectUnknownTypeAnnotation(),
         )
-        jschema = pq.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(jpath, meta), converter
+        jschema = jvm(spark, _PARQUET + "ParquetFileFormat", "readSchemaFromFooter")(
+            jvm(spark, "org.apache.parquet.hadoop.Footer")(jpath, meta), converter
         )
         return _parse_datatype_json_string(jschema.asNullable().json())
     except Py4JError:

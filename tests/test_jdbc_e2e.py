@@ -309,6 +309,21 @@ def test_scanned_round_trips_every_strategy(spark, derby, sf_smoke):
     assert scanned(load_table(spark, sf_smoke, "customer")) is None
 
 
+def test_partition_count_reads_every_jdbc_scan(spark, derby):
+    """A JDBC scan, renamed to normalized names, is counted off its RDD
+    (one partition per slice) and agrees with executing the plan."""
+    from dumpty_spark.plans.types import normalize_df
+    from dumpty_spark.sinks.writers import _partition_count, _scan_partitions
+
+    for name, (src, plan) in _plans(spark, derby).items():
+        df = normalize_df(scan(spark, src, plan))
+        assert df.columns[0].islower(), name
+        executed = df._jdf.queryExecution().executedPlan()
+        n = executed.execute().getNumPartitions()
+        assert n == (plan.partitions if name != "single" else 1), name
+        assert _scan_partitions(executed) == _partition_count(df) == n, name
+
+
 def _jdbc_pipeline(spark, frames, tmp_path, rows_per_partition):
     from dumpty_spark.pipeline import PipelineConfig, run_pipeline
     from dumpty_spark.plans.state import StateStore

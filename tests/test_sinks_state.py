@@ -302,6 +302,37 @@ def test_one_file_sink_needs_no_exchange(spark, sf_smoke, tmp_path, writer):
             assert len(jobs) == 1 and jobs[0]["shuffle_bytes"] == 0
 
 
+def test_partition_count_answers_from_the_scan(spark, sf_smoke, tmp_path):
+    """A scan under operators that keep its partitions (a rename, an
+    observation) is counted off the scan's RDD, and agrees with
+    executing the plan; a coalesce or a union is counted by executing
+    the plan, and a plan with an exchange gives None under AQE."""
+    from pyspark.sql import Observation
+
+    from dumpty_spark.plans.types import normalize_df
+    from dumpty_spark.sinks.writers import _partition_count, _scan_partitions
+
+    orders = load_table(spark, sf_smoke, "orders")
+    orders.repartition(3).write.parquet(str(tmp_path / "split"))
+    split = spark.read.parquet(str(tmp_path / "split"))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan()
+
+    for i, (df, n) in enumerate(((orders, 1), (split, 3))):
+        renamed = normalize_df(df.toDF(*[c.upper() for c in df.columns]))
+        observed = renamed.observe(Observation(f"pc{i}"), F.count(F.lit(1)).alias("n"))
+        for shaped in (df, renamed, observed):
+            assert _scan_partitions(plan(shaped)) == n
+            assert _partition_count(shaped) == plan(shaped).execute().getNumPartitions() == n
+    for shaped, n in ((split.coalesce(2), 2), (orders.union(split), 4)):
+        assert _scan_partitions(plan(shaped)) is None
+        assert _partition_count(shaped) == plan(shaped).execute().getNumPartitions() == n
+    exchanged = orders.repartition(2)
+    assert _scan_partitions(plan(exchanged)) is None
+    assert _partition_count(exchanged) is None
+
+
 def test_delete_keys_rewrites_only_hit_files(spark, sf_smoke, tmp_path):
     """Targeted delete: only files containing the keys are rewritten (by
     mtime), a fully-matching file is removed, other files' bytes are

@@ -73,3 +73,8 @@ def test_normalize_df_projection(spark):
     out = normalize_df(df)
     assert out.columns == ["weird_col", "other_name"]
     assert out.collect() == df.collect()
+
+
+def test_normalize_df_returns_a_normalized_frame_itself(spark):
+    df = spark.createDataFrame([(1, "x")], ["weird_col", "other_name"])
+    assert normalize_df(df) is df
