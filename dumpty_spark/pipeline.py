@@ -2,17 +2,19 @@
 
 The reference hand-rolls a 3-stage queue machine (introspect → extract →
 load, pipeline.py:130-152) because nothing else scheduled its work. On
-Spark, concurrent actions on one session + the FAIR scheduler ARE the
-queue machine, so each table runs introspect→plan→extract→validate as one
-task on a thread pool; Spark multiplexes the cluster across them. What
+Spark, concurrent actions on one session ARE the queue machine, so each
+table runs introspect→plan→extract→validate as one task on a thread
+pool; Spark's scheduler multiplexes the cluster across them. What
 survives from the reference is the *decisions*: TTL-cached introspection
 (I3), the partition planner (X8), target-size feedback (X6), row-count
 reconciliation (X7), and the run summary (main.py:317-332 parity).
 
 Scale: thread count bounds concurrent Spark jobs (the reference's
 extract_workers=64 production knob); each job's internal parallelism
-comes from its scan plan. FAIR pools stop one huge table from starving
-the small ones.
+comes from its scan plan. The session runs Spark's default FIFO
+scheduler: a job's tasks start only once every task of the jobs
+submitted before it has started, so the small tables submitted after a
+huge table wait for its tasks to be placed on a core.
 """
 
 from __future__ import annotations
@@ -69,7 +71,6 @@ def _process_table(
     cfg: PipelineConfig,
     store: StateStore,
 ) -> TableState:
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", "pipeline")
     spark.sparkContext.setJobDescription(f"extract:{name}")
     state = store.get_table(name) or TableState(name=name)
     pk = cfg.pk_by_table.get(name)

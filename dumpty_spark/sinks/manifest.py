@@ -152,10 +152,12 @@ def _stage_dataframe(
 ) -> list[str]:
     """Write df into data/ as immutable files named for the version that
     will reference them. Returns the new files' basenames (NOT yet
-    visible: nothing references them until commit)."""
+    visible: nothing references them until commit). ``partitions``
+    shapes the files as every sink write does (``writers._sized``)."""
+    from dumpty_spark.sinks.writers import _sized  # writers imports this module
+
     tmp = os.path.join(root, f"__stage_v{version}_{tag}")
-    out = df.repartition(partitions) if partitions else df
-    out.write.mode("overwrite").parquet(tmp)
+    _sized(df, partitions).write.mode("overwrite").parquet(tmp)
     names = []
     os.makedirs(os.path.join(root, _DATA_DIR), exist_ok=True)
     for i, part in enumerate(

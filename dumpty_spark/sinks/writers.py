@@ -12,6 +12,13 @@ a write, observed bytes / target-size → the partition count the NEXT run
 should use. Within one query AQE already coalesces; this advisory is the
 CROSS-RUN knob the reference persisted in TinyDB (we put it in the state
 store).
+
+Every sink write here, and every file the versioned store stages
+(sinks/manifest.py), gets its file count from one helper, ``_sized``: an
+input that already reads as that many partitions is written as it comes,
+and any other goes through one exchange that routes each row by a hash
+of its content. That exchange needs no sort and gives at most the asked
+number of files.
 """
 
 from __future__ import annotations
@@ -38,14 +45,49 @@ TARGET_PARTITION_BYTES = 50 * 1024 * 1024  # reference config.py:53
 def _sized(df: DataFrame, partitions: int | None) -> DataFrame:
     """Shape ``df`` into ``partitions`` output files (None: as it comes).
     An input that already reads as that many partitions is written as it
-    comes: each of its tasks scans, encodes and writes one file, and a
-    round-robin exchange would buy only a shuffle-map job and the local
-    sort Spark runs before it. Any other input is ``repartition``ed, so
-    its scan and its encode both run in parallel — ``coalesce`` would
-    pull a multi-partition scan into fewer tasks."""
+    comes: each of its tasks scans, encodes and writes one file. Any
+    other input goes through one exchange, so its scan and its encode
+    both run in parallel (``coalesce`` would pull a multi-partition scan
+    into fewer tasks).
+
+    Into more than one file the exchange hashes every column Spark can
+    hash (``_hash_keys``): a row's file depends only on its content, so a
+    retried map task re-sends each row to the same file in any input
+    order. A round-robin ``repartition(n)`` gets that only by sorting
+    every row of every map task first
+    (``spark.sql.execution.sortBeforeRepartition``). The trade-off: a
+    sink has at most ``partitions`` files, since a bucket no row hashes
+    to writes no file (Spark still writes the first), and exact-duplicate
+    rows always share a file. One file keeps ``repartition(1)``, which
+    Spark does not sort, and a frame with no hashable column keeps
+    ``repartition(n)``, sort included."""
     if not partitions or _partition_count(df) == partitions:
         return df
-    return df.repartition(partitions)
+    return df.repartition(partitions, *(_hash_keys(df) if partitions > 1 else ()))
+
+
+def _hashable(t: T.DataType) -> bool:
+    """Whether Spark can hash a value of type ``t``: no map and no
+    variant at any depth."""
+    if isinstance(t, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(t, T.ArrayType):
+        return _hashable(t.elementType)
+    if isinstance(t, T.StructType):
+        return all(_hashable(f.dataType) for f in t.fields)
+    if isinstance(t, T.UserDefinedType):
+        return _hashable(t.sqlType())
+    return True
+
+
+def _hash_keys(df: DataFrame) -> list:
+    """Every top-level column of ``df`` Spark can hash, quoted so a name
+    with a dot or a backtick resolves as itself."""
+    return [
+        F.col("`" + f.name.replace("`", "``") + "`")
+        for f in df.schema.fields
+        if _hashable(f.dataType)
+    ]
 
 
 # operators whose output partitions are their one child's, one to one
@@ -271,7 +313,7 @@ def compact_parquet(
         n_files = advise_partitions(observed, len(before), target_bytes)
         df = spark.read.parquet(leaf)
         tmp, old = leaf + "__compacting", leaf + "__pre_compact"
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
+        _sized(df, n_files).write.mode("overwrite").parquet(tmp)
         os.rename(leaf, old)
         os.rename(tmp, leaf)
         shutil.rmtree(old)

@@ -20,6 +20,7 @@ sessionInitStatement (config.yaml.example:45).
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dumpty_spark.plans.planner import PartitionPlan, TableStats
-from dumpty_spark.session import jvm
+from dumpty_spark.session import jvm, memo
 
 DEFAULT_FETCHSIZE = 2000  # reference config.yaml.example:52
 DIRTY_READ = "SET TRANSACTION ISOLATION LEVEL READ UNCOMMITTED"
@@ -109,26 +110,31 @@ def scanned(df: DataFrame) -> tuple[JdbcSource, PartitionPlan] | None:
     filter, a projection) may not read what its source holds, so it
     gives None, as does any frame that is not a JDBC scan. A predicates
     plan comes back without its column and boundaries, which the scan
-    does not keep."""
+    does not keep.
+
+    Every py4j call is a round trip, so the node classes are checked
+    with one ``isInstance`` each, and the options and the slices come
+    back as one JSON string each (``_to_python``)."""
+    spark = df.sparkSession
     node = df._jdf.queryExecution().analyzed()
-    if node.getClass().getSimpleName() != "LogicalRelation":
+    if not _is_a(spark, node, "org.apache.spark.sql.execution.datasources.LogicalRelation"):
         return None
     rel = node.relation()
-    if rel.getClass().getSimpleName() != "JDBCRelation":
+    if not _is_a(spark, rel, "org.apache.spark.sql.execution.datasources.jdbc.JDBCRelation"):
         return None
     jopts = rel.jdbcOptions()
-    props = dict(jopts.asProperties())  # the options as given, keys in their case
+    props = _to_python(spark, jopts.asProperties())  # keys in their case
     opt = {k.lower(): v for k, v in props.items()}
     dirty = opt.get("sessioninitstatement") == DIRTY_READ
     skip = _SCAN_KEYS | ({"sessioninitstatement"} if dirty else set())
     src = JdbcSource(
-        url=jopts.url(),
+        url=opt["url"],
         table=jopts.tableOrQuery(),
         properties={k: v for k, v in props.items() if k.lower() not in skip},
-        fetchsize=jopts.fetchSize(),
+        fetchsize=int(opt.get("fetchsize", 0)),
         dirty_read=dirty,
     )
-    where = [p.whereClause() for p in rel.parts()]
+    where = [p["whereClause"] for p in _to_python(spark, rel.parts())]
     if where == [None]:
         plan = PartitionPlan(strategy="single")
     elif "partitioncolumn" in opt:
@@ -142,6 +148,26 @@ def scanned(df: DataFrame) -> tuple[JdbcSource, PartitionPlan] | None:
     else:
         plan = PartitionPlan(strategy="predicates", partitions=len(where), predicates=where)
     return src, plan
+
+
+def _is_a(spark: SparkSession, obj: JavaObject, fqn: str) -> bool:
+    """Whether JVM object ``obj`` is an instance of class ``fqn``, in one
+    round trip on the class's ``java.lang.Class``, memoized per session."""
+    cls = memo(spark, ("jvm-class", fqn), lambda: jvm(spark, fqn)._java_lang_class)
+    return cls.isInstance(obj)
+
+
+def _to_python(spark: SparkSession, obj: JavaObject) -> Any:
+    """``obj`` as Python lists, dicts and scalars, sent as one JSON string
+    written in the JVM by Spark's bundled Jackson with its Scala module (a
+    case class is an object of its fields): one round trip, where py4j
+    would fetch a map or an array one key or element at a time."""
+
+    def build():
+        scala = jvm(spark, "com.fasterxml.jackson.module.scala.DefaultScalaModule$", "MODULE$")
+        return jvm(spark, "com.fasterxml.jackson.databind.ObjectMapper")().registerModule(scala)
+
+    return json.loads(memo(spark, ("jvm-json",), build).writeValueAsString(obj))
 
 
 def _bound(v: str) -> Any:

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
+from contextlib import contextmanager
 
 import pytest
 
@@ -64,3 +66,29 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_t2() -> str:
     return SF_T2
+
+
+@pytest.fixture
+def round_trips(monkeypatch):
+    """A context manager that records the py4j commands the calling
+    thread sends to the JVM while it is open, each one a socket round
+    trip. py4j's release of collected Java objects (``m d``), which runs
+    wherever Python's GC happens to run, is not recorded."""
+    import py4j.clientserver
+
+    @contextmanager
+    def recording():
+        sent: list[str] = []
+        me = threading.current_thread()
+        send = py4j.clientserver.ClientServerConnection.send_command
+
+        def counted(self, command):
+            if threading.current_thread() is me and not command.startswith("m\nd\n"):
+                sent.append(command)
+            return send(self, command)
+
+        monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+        yield sent
+        monkeypatch.undo()
+
+    return recording

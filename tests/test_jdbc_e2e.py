@@ -309,6 +309,27 @@ def test_scanned_round_trips_every_strategy(spark, derby, sf_smoke):
     assert scanned(load_table(spark, sf_smoke, "customer")) is None
 
 
+SCANNED_BUDGET = 22
+
+
+def test_scanned_reads_a_scan_back_in_few_round_trips(spark, derby, sf_smoke, round_trips):
+    """``scanned`` asks the node classes with one ``isInstance`` each and
+    reads the options and the slices back as one JSON string each: at
+    most 22 py4j round trips for a scan of each strategy, the session's
+    first included (it was 100-117, reading the options map key by key
+    and the slices element by element), and 5 to learn that a parquet
+    frame is not a JDBC scan (was 7)."""
+    frames = [scan(spark, src, plan) for src, plan in _plans(spark, derby).values()]
+    for df in frames:
+        with round_trips() as sent:
+            assert scanned(df) is not None
+        assert 0 < len(sent) <= SCANNED_BUDGET, sent
+    orders = load_table(spark, sf_smoke, "orders")
+    with round_trips() as sent:
+        assert scanned(orders) is None
+    assert len(sent) <= 5, sent
+
+
 def test_partition_count_reads_every_jdbc_scan(spark, derby):
     """A JDBC scan, renamed to normalized names, is counted off its RDD
     (one partition per slice) and agrees with executing the plan."""

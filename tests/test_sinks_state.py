@@ -333,6 +333,74 @@ def test_partition_count_answers_from_the_scan(spark, sf_smoke, tmp_path):
     assert _partition_count(exchanged) is None
 
 
+def _exchange(df) -> str:
+    """The partitioning of the exchange in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return next(line for line in plan.splitlines() if "Exchange" in line)
+
+
+def test_sized_hashes_every_hashable_column(spark, sf_smoke):
+    """Into more than one file, ``_sized`` routes each row by a hash of
+    every column (no round robin, so no sort before the exchange); into
+    one file it keeps ``repartition(1)``."""
+    from dumpty_spark.sinks.writers import _sized
+
+    orders = load_table(spark, sf_smoke, "orders")
+    exchange = _exchange(_sized(orders, 3))
+    assert "hashpartitioning(" in exchange and "RoundRobinPartitioning" not in exchange
+    hashed = exchange.split("hashpartitioning(", 1)[1]
+    assert all(f"{c}#" in hashed for c in orders.columns), exchange
+    assert "SinglePartition" in _exchange(_sized(orders.union(orders), 1))
+
+
+def test_hashed_files_do_not_depend_on_input_order(spark, tmp_path):
+    """A row's file depends only on its content: the same rows read in
+    two orders over four partitions give the same rows in each file,
+    which is what a retried map task relies on."""
+    import gzip
+
+    rows = [(i, f"v{i % 7}", i * 0.5) for i in range(300)]
+    files = []
+    for i, order in enumerate((rows, rows[::-1])):
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(order, 4), "k long, s string, x double"
+        )
+        out = write_ndjson(df, str(tmp_path / f"o{i}"), partitions=3)
+        files.append({
+            os.path.basename(p)[:10]: frozenset(gzip.open(p, "rt").read().splitlines())
+            for p in glob.glob(out)
+        })
+    assert len(files[0]) == 3 and sum(len(v) for v in files[0].values()) == len(rows)
+    assert files[0] == files[1]
+
+
+def test_map_columns_are_not_hashed(spark, tmp_path):
+    """Spark cannot hash a map or a variant, at any depth: the exchange
+    hashes the other columns and every row is written; a frame with no
+    hashable column falls back to round robin."""
+    from dumpty_spark.sinks.writers import _sized, write_parquet
+
+    df = spark.range(200).select(
+        F.col("id"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.create_map(F.lit("k"), F.col("id")).alias("m")).alias("sm"),
+        F.array(F.create_map(F.lit("k"), F.col("id"))).alias("am"),
+        F.parse_json(F.format_string('{"a": %d}', F.col("id"))).alias("v"),
+    )
+    hashed = _exchange(_sized(df, 3)).split("hashpartitioning(", 1)[1]
+    assert hashed.startswith("id#") and ", 3)" in hashed
+    assert not any(f"{c}#" in hashed for c in ("m", "sm", "am", "v"))
+    out = write_parquet(df, str(tmp_path / "maps"), partitions=3)
+    back = spark.read.parquet(str(tmp_path / "maps"))
+    assert len(glob.glob(out)) == 3 and back.count() == 200
+    assert sorted(r["id"] for r in back.select("id").collect()) == list(range(200))
+
+    only_map = df.select("m")
+    assert "RoundRobinPartitioning(3)" in _exchange(_sized(only_map, 3))
+    write_parquet(only_map, str(tmp_path / "only_map"), partitions=3)
+    assert spark.read.parquet(str(tmp_path / "only_map")).count() == 200
+
+
 def test_delete_keys_rewrites_only_hit_files(spark, sf_smoke, tmp_path):
     """Targeted delete: only files containing the keys are rewritten (by
     mtime), a fully-matching file is removed, other files' bytes are
